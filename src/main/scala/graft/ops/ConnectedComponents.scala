@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,34 +16,73 @@ import org.apache.spark.sql.functions._
   * transitive closure of those pairs — pair (a,b) + pair (b,c) must
   * collapse a, b, c into one cluster even though (a,c) never collided.
   *
-  * Scale shape, per round: partial-aggregatable `min(label)` shuffles
-  * (map-side combine shrinks them before the exchange) plus equi-joins
-  * back to the label table. The driver-side convergence check reads a
-  * single scalar (sum of labels, which strictly decreases while any
-  * label changes — summed in DECIMAL(38,0) so it cannot wrap at any
-  * node-count/id scale), the standard driver-loop pattern for
-  * iterative dataflow — no row data ever reaches the driver.
-  * `localCheckpoint` after every round truncates lineage so the plan
-  * stays O(1) across rounds instead of re-deriving round k from rounds
-  * 1..k-1. Per-round path compression (label ← label(label)) turns
-  * diameter-bound convergence into O(log diameter)-ish for the price
-  * of one label-table self-join.
+  * Two phases ([[labelViaBuckets]], [[labelAlternating]]):
+  *  1. CONTRACTION — one `mapPartitions` runs an exact [[UnionFind]] over
+  *     each partition's rows and rewrites them to (node, local root),
+  *     the local root being the min id of the node's local component.
+  *     Exact because every bucket / edge lies inside one partition, every
+  *     local component is connected in the input, and two local
+  *     components that share a root share that node. Per-partition state
+  *     is O(rows in the partition), which AQE's advisory partition bytes
+  *     bound — never O(graph).
+  *  2. GLOBAL FIXPOINT — the unchanged distributed rounds on the
+  *     contracted relation. They do real work only for components that
+  *     span partitions; when AQE coalesces the relation to one partition
+  *     (every benchmark-scale input) phase 1 is already the answer and
+  *     phase 2 is one confirming iteration. Across many partitions each
+  *     local component collapses to one hop, so no distance in the
+  *     contracted graph exceeds its distance in the input and phase 2
+  *     needs at most the rounds the single-phase fixpoint needed.
   *
-  * If `maxRounds` truncates before the fixpoint a warning is printed —
-  * partial labels are otherwise indistinguishable from converged ones.
-  * For adversarial long-chain graphs at 100 TB, [[labelAlternating]]
-  * implements alternating large-star/small-star (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC '14), which
-  * reaches the same fixpoint in O(log² n) rounds independent of graph
-  * diameter — property-tested equal to [[label]] on random and
-  * pathological chain graphs.
+  * Scale shape of a phase-2 round: partial-aggregatable `min(label)`
+  * shuffles (map-side combine shrinks them before the exchange) plus
+  * equi-joins back to the label table. The driver-side convergence check
+  * reads a single scalar (sum of labels, which strictly decreases while
+  * any label changes — summed in DECIMAL(38,0) so it cannot wrap at any
+  * node-count/id scale), the standard driver-loop pattern for iterative
+  * dataflow — no row data ever reaches the driver. `localCheckpoint`
+  * after every round truncates lineage so the plan stays O(1) across
+  * rounds instead of re-deriving round k from rounds 1..k-1. Per-round
+  * path compression (label ← label(label)) turns diameter-bound
+  * convergence into O(log diameter)-ish for the price of one label-table
+  * self-join.
+  *
+  * If `maxRounds` stops a fixpoint before convergence the operator throws
+  * [[IllegalStateException]] — partial labels are otherwise
+  * indistinguishable from converged ones. For adversarial long-chain
+  * graphs, [[labelAlternating]] implements alternating
+  * large-star/small-star (Kiveris et al., "Connected Components in
+  * MapReduce and Beyond", SoCC '14), which reaches the same fixpoint in
+  * O(log² n) rounds independent of graph diameter — property-tested
+  * equal to [[label]] on random and pathological chain graphs.
   */
 object ConnectedComponents {
 
-  /** Shared fixpoint driver: `step` maps the current (id, label) table
-    * to the next one (monotone — labels only decrease); iterate with
-    * path compression until the label sum stops changing.
+  /** Exact sequential union-find over long node ids: union-by-min (the
+    * larger root always attaches under the smaller) plus path
+    * compression, so every root is its component's minimum id — the
+    * label contract of every operator here. State is one unboxed-key
+    * map entry per node added.
     */
+  private[ops] final class UnionFind {
+    private val parent = mutable.LongMap.empty[Long]
+    def add(x: Long): Unit = if (!parent.contains(x)) parent.update(x, x)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val n = parent(c); parent.update(c, r); c = n }
+      r
+    }
+    def union(a: Long, b: Long): Unit = {
+      add(a); add(b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent.update(math.max(ra, rb), math.min(ra, rb))
+    }
+    /** (node, component min) for every node added. */
+    def labels: Iterator[(Long, Long)] = parent.keysIterator.map(x => (x, find(x)))
+  }
+
   /** Path compression — label(x) ← min(label(x), label(label(x))).
     * Labels are always ids of component members, so the lookup stays
     * inside the component; chasing one extra hop per round turns
@@ -55,6 +96,11 @@ object ConnectedComponents {
       .select(col("a.id").as("id"),
         least(col("a.label"), coalesce(col("llabel"), col("a.label"))).as("label"))
 
+  /** Shared fixpoint driver: `step` maps the current (id, label) table
+    * to the next one (monotone — labels only decrease); iterate with
+    * path compression until the label sum stops changing. Throws if
+    * `maxRounds` iterations end before that.
+    */
   private def fixpoint(
       init: DataFrame, step: DataFrame => DataFrame, maxRounds: Int): DataFrame = {
     def labelSum(df: DataFrame): java.math.BigDecimal =
@@ -76,13 +122,11 @@ object ConnectedComponents {
       prevSum = s
       labels = next
       round += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $round sum=$s converged=$converged")
     }
     if (!converged)
-      System.err.println(
-        s"[cc] WARNING: stopped at maxRounds=$maxRounds before the fixpoint — " +
-          "labels are PARTIAL (components may still be split)")
+      throw new IllegalStateException(
+        s"connected components: no fixpoint within maxRounds=$maxRounds — " +
+          "labels would be partial (components may still be split)")
     labels
   }
 
@@ -94,22 +138,41 @@ object ConnectedComponents {
     * expansion is exactly what melts down on a viral near-dup cluster
     * at 100 TB, and this form never creates it.
     *
-    * One round = id→bucket-min→id (two partial-agg min shuffles), i.e.
-    * a FULL round of the pair graph, so rounds = pair-graph diameter —
-    * not the doubled diameter a naive bipartite encoding pays.
+    * Phase 1 hash-partitions the relation by bucket (so every bucket lies
+    * inside one partition) and unions each partition's co-members; the
+    * contracted relation is (id, local root), one row per id per
+    * partition it occurs in, the local root serving as the new bucket.
+    * Phase 2 then iterates on it: one round = id→bucket-min→id (two
+    * partial-agg min shuffles), i.e. a FULL round of the pair graph over
+    * the contracted relation, so rounds track the contracted pair-graph
+    * diameter — at most the input's, and 0 once phase 1 has met every
+    * component whole (one confirming iteration, e.g. at one partition).
     */
   def labelViaBuckets(members: DataFrame, maxRounds: Int = 50): DataFrame = {
+    val sp = members.sparkSession
+    import sp.implicits._
     // lazy checkpoint: the seed round's first action materializes it
     // (one fewer standalone job; see the fixpoint note).
     // The keyed repartition (no explicit N — AQE picks the width from
-    // bytes) does two jobs: (a) the checkpointed blocks' partition count
-    // scales with DATA, not with the session's parallelism — without it
-    // every fixpoint round re-reads `mem` through stages as wide as the
-    // upstream ingest repartition (32 tasks of ~0 ms at bench scale,
-    // measured ~45% of q67's wall in pure stage overhead; ProfileQuery);
-    // (b) the blocks land hash-partitioned on the round-join key.
-    val mem = members.select(col("id"), col("bucket"))
+    // bytes) does two jobs: (a) the partition count scales with DATA, not
+    // with the session's parallelism — without it every fixpoint round
+    // re-reads `mem` through stages as wide as the upstream ingest
+    // repartition (32 tasks of ~0 ms at bench scale); (b) it confines
+    // every bucket to one partition, which phase 1's local union-find
+    // needs — AQE coalescing merges whole hash partitions, so (b) holds
+    // at any coalesced width.
+    val mem = members.select(col("id").cast("long"), col("bucket").cast("long"))
       .repartition(col("bucket"))
+      .as[(Long, Long)]
+      .mapPartitions { rows =>
+        val uf = new UnionFind
+        val firstMember = mutable.LongMap.empty[Long]
+        rows.foreach { case (id, bucket) =>
+          uf.union(id, firstMember.getOrElseUpdate(bucket, id))
+        }
+        uf.labels
+      }
+      .toDF("id", "bucket")
       .localCheckpoint(eager = false)
     // r14, two join eliminations with the identical fixpoint:
     //  - the old per-round label-update join (labels ⋈ viaBuckets +
@@ -157,10 +220,8 @@ object ConnectedComponents {
     * Scale shape at 100 TB: per-group state is O(group size) (IVF cell
     * sizes are bounded by construction — the same bound that makes the
     * candidate join sub-quadratic), groups distribute across executors,
-    * and there are ZERO global barriers. Union-by-min (the larger root
-    * always attaches under the smaller) + path compression makes the
-    * final root of every tree the component's min id — the same label
-    * contract as [[label]].
+    * and there are ZERO global barriers. [[UnionFind]]'s roots are
+    * component min ids — the same label contract as [[label]].
     *
     * `members` = (grp, id) with each id in exactly one grp;
     * `edges` = (grp, src, dst) with both endpoints in grp. Returns
@@ -181,21 +242,9 @@ object ConnectedComponents {
         col(edges.columns(2)).cast("long")))
       .as[(Long, Long, Long)]
     rows.groupByKey(_._1).flatMapGroups { (_, it) =>
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def add(x: Long): Unit = if (!parent.contains(x)) parent(x) = x
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      it.foreach { case (_, a, b) =>
-        add(a); add(b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      parent.keysIterator.map(id => (id, find(id)))
+      val uf = new UnionFind
+      it.foreach { case (_, a, b) => uf.union(a, b) }
+      uf.labels
     }.toDF("id", "label")
   }
 
@@ -206,6 +255,13 @@ object ConnectedComponents {
     * long-chain graphs where min-label propagation (even with path
     * compression) pays O(log diameter) rounds that each shuffle the
     * full edge list.
+    *
+    * Phase 1 runs a local union-find over each partition of the distinct
+    * edge list and replaces the partition's edges by (v, local root) for
+    * every v ≠ local root — each partition becomes a star forest with
+    * the same connectivity. The star rounds below then run on the union
+    * of those forests; they do real work only where components span
+    * partitions (at one partition the first round only confirms).
     *
     *  - large-star(u): every STRICTLY LARGER neighbor of u re-attaches
     *    to m = min(Γ(u) ∪ {u});
@@ -257,8 +313,17 @@ object ConnectedComponents {
     // lazy checkpoints, same rationale as fixpoint(): the signature
     // action materializes the round's edge list and the convergence
     // scalars in one job instead of two.
-    var e = edges.select(col("src"), col("dst"))
+    val sp = edges.sparkSession
+    import sp.implicits._
+    var e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst")).distinct()
+      .as[(Long, Long)]
+      .mapPartitions { es =>
+        val uf = new UnionFind
+        es.foreach { case (a, b) => uf.union(a, b) }
+        uf.labels.filter { case (v, root) => v != root }
+      }
+      .toDF("src", "dst")
       .localCheckpoint(eager = false)
     var sig = signature(e)
     var round = 0
@@ -278,13 +343,11 @@ object ConnectedComponents {
       sig = s
       e = next
       round += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc-alt] round $round edges=${s._1} converged=$converged")
     }
     if (!converged)
-      System.err.println(
-        s"[cc-alt] WARNING: stopped at maxRounds=$maxRounds before the star " +
-          "forest stabilized — labels are PARTIAL")
+      throw new IllegalStateException(
+        s"connected components: star forest not stable within maxRounds=$maxRounds — " +
+          "labels would be partial (components may still be split)")
     val star = e.groupBy(col("src").as("id")).agg(min(col("dst")).as("_label"))
     nodes.select(col("id")).join(star, Seq("id"), "left")
       .select(col("id"), coalesce(col("_label"), col("id")).as("label"))
@@ -298,7 +361,7 @@ object ConnectedComponents {
     *              a distinct shuffle).
     * @param maxRounds hard cap on propagation rounds (safety valve; the
     *                  loop exits as soon as labels stop changing, and
-    *                  warns if the cap truncated propagation).
+    *                  throws if the cap would truncate propagation).
     * @return (`id`, `label`) with label = min node id in the component.
     */
   def label(nodes: DataFrame, edges: DataFrame, maxRounds: Int = 50): DataFrame = {

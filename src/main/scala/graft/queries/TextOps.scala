@@ -593,8 +593,9 @@ object TextOps {
   // beats near (identical text is always also band-identical, so the
   // reason column reports the strongest cause). Shape at 100 TB: the
   // union of q58's and q67's shapes — one fingerprint partial agg +
-  // the membership CC; the final verdict join is on doc_id, co-
-  // partitioned with both inputs.
+  // the membership CC (per-partition union-find, then global rounds
+  // only for clusters that span partitions); the final verdict join is
+  // on doc_id, co-partitioned with both inputs.
   private def q126(s: SparkSession, dir: String): DataFrame =
     corpusClean(docs(s, dir))
 
@@ -612,9 +613,10 @@ object TextOps {
       .select(col("doc_id").as("id"),
         (col("band_idx").cast("long") * 32768L + col("band_val")).as("bucket"))
     // r15 (guide §2.6): the exact-fingerprint branch and the near-dup CC
-    // fixpoint are independent until the verdict join — the fixpoint's
-    // serial driver rounds otherwise leave the md5 canonicalization
-    // waiting behind them. Two narrow columns checkpoint per side.
+    // are independent until the verdict join — the CC's global phase is
+    // a serial driver loop that would otherwise leave the md5
+    // canonicalization waiting behind it. Two narrow columns checkpoint
+    // per side.
     val Seq(exact, near) = graft.ops.Overlap.frames(Seq(
       () => fp
         .join(fp.groupBy(col("fp")).agg(min(col("doc_id")).as("canon_id")), Seq("fp"))
@@ -2892,10 +2894,12 @@ object TextOps {
   // generation. q61 emits near-dup PAIRS; dedup needs per-doc cluster
   // ids — pair (a,b) + pair (b,c) must collapse a,b,c into ONE group
   // even though (a,c) never collided in any band. Components come from
-  // graft.ops.ConnectedComponents (min-label propagation — one
-  // partial-agg shuffle per round, driver sees only a convergence
-  // scalar); cluster_id = min doc_id in the component is the canonical
-  // representative a dedup pass would keep.
+  // graft.ops.ConnectedComponents (an exact union-find per partition
+  // of the bucket-partitioned relation, then min-label propagation —
+  // partial-agg shuffles per round, driver sees only a convergence
+  // scalar — for clusters that span partitions; at one partition that
+  // phase only confirms); cluster_id = min doc_id in the component is
+  // the canonical representative a dedup pass would keep.
   //
   // Scale-critical shape: the propagation runs on the MEMBERSHIP
   // (doc, band-bucket) relation via ConnectedComponents.labelViaBuckets
@@ -2944,9 +2948,11 @@ object TextOps {
 
   // q91 — q67's clusters via the ALTERNATING large-star/small-star CC
   // ([[graft.ops.ConnectedComponents.labelAlternating]]): same near-dup
-  // clustering contract, different fixpoint algorithm — edge-list star
-  // contraction in O(log² n) rounds independent of graph diameter,
-  // instead of label propagation bounded by it. Shares q67's oracle
+  // clustering contract, different fixpoint algorithm — each partition
+  // of the distinct pair list contracts to a star forest by a local
+  // union-find, then edge-list star rounds (O(log² n), independent of
+  // graph diameter) join the forests across partitions, instead of
+  // label propagation bounded by the diameter. Shares q67's oracle
   // verbatim, so the gate proves THREE formulations agree: membership
   // propagation (q67 Spark), pair-closure recursive CTE (oracle), and
   // star contraction (here). This form takes the materialized pair

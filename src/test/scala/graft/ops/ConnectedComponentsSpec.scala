@@ -83,16 +83,15 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(labels == (1L to 40L).map(_ -> 1L).toMap)
   }
 
-  test("maxRounds caps propagation (partial labels, no hang)") {
-    // 9-chain, maxRounds = 1: one capped iteration = TWO neighbor hops
-    // (the r15 double-step) + one path-compression hop. From identity
-    // labels: hop 1 → [1,1,2,3,4,5,6,7,8], hop 2 → [1,1,1,2,3,4,5,6,7],
-    // compress (label ← label(label)) → [1,1,1,1,1,2,3,4,5]. The tail of
-    // the chain is NOT collapsed — the cap truncated propagation.
-    val labels = ConnectedComponents.label(
-      (1L to 9L).toDF("id"), (1L to 8L).map(i => (i, i + 1)).toDF("src", "dst"),
-      maxRounds = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels(5L) == 1L && labels(6L) == 2L && labels(9L) == 5L)
+  test("maxRounds truncation throws instead of returning partial labels") {
+    // 9-chain, maxRounds = 1: one iteration (two neighbor hops + one
+    // compression hop) leaves the tail of the chain split, so the
+    // operator must refuse to return its labels
+    val e = intercept[IllegalStateException] {
+      ConnectedComponents.label(
+        (1L to 9L).toDF("id"), (1L to 8L).map(i => (i, i + 1)).toDF("src", "dst"),
+        maxRounds = 1)
+    }
+    assert(e.getMessage.contains("maxRounds=1"))
   }
 }

@@ -107,6 +107,41 @@ class GraphPropertySpec extends AnyFunSuite {
     assert(got == (1L to 5L).map(n => n -> n).toMap)
   }
 
+  test("two-phase forms match union-find when the relation spans many partitions") {
+    // AQE coalesces every small test relation to one partition, where
+    // phase 1 alone is the answer; pin 7 uncoalesced partitions so the
+    // global phase has to join local components across partitions
+    val confs = Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "7")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val rng = new scala.util.Random(2024)
+      val graphs = Seq(300, 1000).map { n =>
+        s"random n=$n" -> ((1L to n.toLong),
+          Seq.fill(n * 3 / 4)((rng.nextInt(n).toLong + 1, rng.nextInt(n).toLong + 1))
+            .filter { case (a, b) => a != b })
+      } :+ ("chain n=300" -> ((1L to 300L), (1L until 300L).map(i => (i, i + 1))))
+      for ((name, (nodes, edges)) <- graphs) {
+        val expected = unionFind(nodes, edges)
+        val alt = ConnectedComponents.labelAlternating(
+          nodes.toDF("id"), edges.toDF("src", "dst"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(alt == expected, s"labelAlternating, $name")
+        // membership form: every edge becomes a two-member bucket, and
+        // every node its own singleton bucket so isolated nodes survive
+        val members = edges.zipWithIndex.flatMap { case ((a, b), i) =>
+          Seq((a, i.toLong), (b, i.toLong)) } ++ nodes.map(n => (n, -n))
+        val viaBuckets = ConnectedComponents.labelViaBuckets(members.toDF("id", "bucket"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(viaBuckets == expected, s"labelViaBuckets, $name")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("Morton keys are invertible: no collisions across 16-bit inputs") {
     val rng = new scala.util.Random(1)
     val pts = Seq.fill(300)((rng.nextInt(65536).toLong, rng.nextInt(65536).toLong)).distinct
