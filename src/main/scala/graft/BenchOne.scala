@@ -11,10 +11,9 @@ object BenchOne {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     // optional trailing k=v args become runtime confs — the same-boot
-    // A/B lever for the conf-switchable storage arms (q194/q147/q171/
-    // q196, spark.graft.ntile.storage). Explicit args rather than env
-    // so the invocation line IS the record of which arm was measured;
-    // the query-side require() rejects a typo'd value.
+    // A/B lever for a Spark conf or a `spark.graft.*` switch (topk.*,
+    // ppjoin.positional). Explicit args rather than env so the
+    // invocation line IS the record of which arm was measured.
     val confs = args.drop(2).map { a =>
       val i = a.indexOf('=')
       require(i > 0, s"expected key=value conf arg, got '$a'")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: `runMain graft.Explain <query> [query ...]` — executes
   * each named catalog query on `SPARK_GRAFT_SF_DIR` (default sf0.001) and
   * prints the final (post-AQE) physical plan. The "is this the plan you'd
@@ -11,10 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
+    val spark = GraftSession.localSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // trailing k=v args set session confs (same convention as BenchOne),
     // so conf-armed plan variants can be dumped for the evidence files

@@ -2,58 +2,70 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{CountInExpr, DotProductExpr, RollingHashExpr, ShinglesExpr, SubwordCountExpr, SubwordTokenizeExpr, SubwordVocab, VecNormExpr, VectorExpressions}
+import graft.functions._
+import graft.plans.{FuseZipFold, TopKPerGroupStrategy}
 
-/** Session-extension packaging for the engine's native functions — the
-  * idiomatic way to ship custom Catalyst expressions with a library:
-  *
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
-  *     ...
-  *
-  * (or `.withExtensions(new GraftExtensions)`). Injected functions are
-  * catalog-visible in every session of the application, unlike the
-  * per-session imperative registration in
-  * [[graft.functions.VectorExpressions.register]] (kept for REPL/test
-  * convenience).
+/** The engine's one registration path: its native SQL functions, the
+  * [[graft.plans.FuseZipFold]] optimizer rule and the
+  * [[graft.plans.TopKPerGroupStrategy]] planner strategy, installed
+  * when the session is built. [[GraftSession.localSession]] builds
+  * every session with it; a packaged deployment can equally pass
+  * `spark.sql.extensions=graft.GraftExtensions`. Because everything is
+  * in place before the first query, no plan depends on which query ran
+  * earlier in the session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProductExpr].getName, "dot_product"),
-      exprs => DotProductExpr(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("vec_norm"),
-      new ExpressionInfo(classOf[VecNormExpr].getName, "vec_norm"),
-      exprs => VecNormExpr(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHashExpr].getName, "rolling_hash"),
-      exprs => RollingHashExpr(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("shingles"),
-      new ExpressionInfo(classOf[ShinglesExpr].getName, "shingles"),
-      exprs => ShinglesExpr(exprs(0), VectorExpressions.literalInt(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("count_in"),
-      new ExpressionInfo(classOf[CountInExpr].getName, "count_in"),
-      exprs => CountInExpr(exprs.head,
-        exprs.tail.map(VectorExpressions.literalString))))
-    e.injectFunction((
-      FunctionIdentifier("subword_count"),
-      new ExpressionInfo(classOf[SubwordCountExpr].getName, "subword_count"),
-      exprs => SubwordCountExpr(exprs.head, SubwordVocab.Default)))
-    e.injectFunction((
-      FunctionIdentifier("subword_tokenize"),
-      new ExpressionInfo(classOf[SubwordTokenizeExpr].getName, "subword_tokenize"),
-      exprs => SubwordTokenizeExpr(exprs.head, SubwordVocab.Default)))
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      e.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
     // fuse aggregate(zip_with(...)) vector folds into native loops
-    e.injectOptimizerRule(_ => graft.plans.FuseZipFold)
+    e.injectOptimizerRule(_ => FuseZipFold)
     // plan the custom top-k-per-group logical node (graft.ops.TopK)
-    e.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
+    e.injectPlannerStrategy(_ => TopKPerGroupStrategy)
+  }
+}
+
+object GraftExtensions {
+
+  /** Every native SQL function: name, expression class, builder. */
+  val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("dot_product", classOf[DotProductExpr], es => DotProductExpr(es(0), es(1))),
+    ("vec_norm", classOf[VecNormExpr], es => VecNormExpr(es.head)),
+    ("rolling_hash", classOf[RollingHashExpr], es => RollingHashExpr(es.head)),
+    ("h60", classOf[H60Expr], es => H60Expr(es.head)),
+    ("shingles", classOf[ShinglesExpr], es => ShinglesExpr(es(0), literalInt(es(1)))),
+    ("count_in", classOf[CountInExpr],
+      es => CountInExpr(es.head, es.tail.map(literalString))),
+    ("minhash_sigs", classOf[MinHashSigsExpr], es => MinHashSigsExpr(es.head)),
+    ("simhash60", classOf[SimHash60Expr], es => SimHash60Expr(es.head)),
+    ("subword_count", classOf[SubwordCountExpr],
+      es => SubwordCountExpr(es.head, SubwordVocab.Default)),
+    ("subword_tokenize", classOf[SubwordTokenizeExpr],
+      es => SubwordTokenizeExpr(es.head, SubwordVocab.Default)))
+
+  /** The shingle width must be a compile-time constant (it is baked into
+    * the generated code), so only integer literals are accepted.
+    */
+  private def literalInt(e: Expression): Int = e match {
+    case Literal(v: Int, _) => v
+    case other =>
+      throw new IllegalArgumentException(
+        s"shingles(words, n) needs a literal int width, got: $other")
+  }
+
+  /** count_in's member set is baked into the operator at plan time, so
+    * only string literals are accepted.
+    */
+  private def literalString(e: Expression): String = e match {
+    case Literal(v: UTF8String, _) => v.toString
+    case other =>
+      throw new IllegalArgumentException(
+        s"count_in(arr, members…) needs literal string members, got: $other")
   }
 }

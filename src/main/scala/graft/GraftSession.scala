@@ -2,24 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Library entry point: a SparkSession builder pre-configured with the
-  * engine's recommended settings — the one-liner a user of the reference
-  * would call to switch.
-  *
-  *   val spark = GraftSession.builder().getOrCreate()
-  *
-  * Defaults: custom functions injected via [[GraftExtensions]], AQE on
-  * (runtime re-planning: post-shuffle coalescing + skew-join splitting),
-  * UTC session time, nanos-as-long for TIMESTAMP(NANOS) parquet, and
-  * shuffle parallelism from SPARK_GRAFT_CPUS rather than the 200-
-  * partition default (wrong for local mode, overridden per-cluster).
+/** The one place a graft session is built. Every entry point — the
+  * Bench family, Verify, Explain, StreamBench, the CLI, the benchmark
+  * harness and the test suite — calls [[localSession]], so each gets
+  * the same [[GraftExtensions]] (native functions, optimizer rule,
+  * planner strategy) and the same [[sharedConfs]]: UTC session time,
+  * nanos-as-long for TIMESTAMP(NANOS) parquet, and shuffle parallelism
+  * sized to the cores rather than the 200-partition default. AQE stays
+  * at Spark's default (on): its runtime re-planning — post-shuffle
+  * coalescing and skew-join splitting — is the engine's second skew
+  * answer after salting (q63/q88), pinned by AdaptiveSpec.
   */
 object GraftSession {
 
-  /** Session confs every graft entry point shares (Verify/Bench/
-    * BenchOne/Explain/tests apply these on top of their own master and
-    * parallelism settings — one definition, six call sites).
-    */
+  /** Session confs every graft session carries. */
   val sharedConfs: Seq[(String, String)] = Seq(
     "spark.sql.session.timeZone" -> "UTC",
     // if an upstream writer ships TIMESTAMP(NANOS) parquet, read it as
@@ -36,37 +32,26 @@ object GraftSession {
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "10000000",
     "spark.ui.enabled" -> "false")
 
-  /** Apply [[sharedConfs]] to any builder. */
-  def tune(b: SparkSession.Builder): SparkSession.Builder =
-    sharedConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
-
-  /** Driver-entry local session (Bench/BenchOne/Verify): local[cpus]
-    * master, cpus shuffle partitions, [[sharedConfs]], plus `extra` —
-    * ONE definition so a conf added for one entry point cannot silently
-    * miss another (the round-5 codegen-cache lesson: Bench and Verify
-    * sized the cache differently until the split was found by
-    * measurement).
+  /** A session with [[GraftExtensions]], [[sharedConfs]], `cpus` shuffle
+    * partitions and `extra` on top — ONE definition so a conf added for
+    * one entry point cannot silently miss another (the round-5
+    * codegen-cache lesson: Bench and Verify sized the cache differently
+    * until the split was found by measurement). The master defaults to
+    * `local[cpus]`; the CLI passes its deployment master instead.
     */
-  def localSession(cpus: String, extra: Seq[(String, String)] = Nil): SparkSession = {
-    val spark = extra.foldLeft(
-        tune(SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus))) {
+  def localSession(
+      cpus: String,
+      extra: Seq[(String, String)] = Nil,
+      master: Option[String] = None): SparkSession = {
+    val spark = (sharedConfs ++ extra).foldLeft(
+        SparkSession.builder()
+          .master(master.getOrElse(s"local[$cpus]"))
+          .withExtensions(new GraftExtensions)
+          .config("spark.sql.shuffle.partitions", cpus)) {
         case (b, (k, v)) => b.config(k, v)
       }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  def builder(
-      master: String = sys.env.getOrElse("SPARK_MASTER", "local[*]"),
-      appName: String = "graft"): SparkSession.Builder =
-    tune(SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
 }

@@ -240,7 +240,6 @@ object StreamBench {
           spark, source(), cap = 1000000), ndDir)
         val streamedNd = spark.read.parquet(ndDir)
           .select(col("doc_a"), col("doc_b")).distinct()
-        graft.functions.VectorExpressions.register(spark)
         val ex = graft.ops.MinHash.withBands(
             Tables.load(spark, sfDir, "documents").select(col("doc_id"), col("text")))
           .select(col("doc_id"), explode(array((0 until graft.ops.MinHash.NumBands)

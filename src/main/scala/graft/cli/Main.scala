@@ -15,14 +15,10 @@ import graft.etl.{Catalog, Clean, DisabledLlmClient, Enrich}
   */
 object Main {
 
-  private def session(): SparkSession = SparkSession.builder()
-    .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-    .appName("graft-etl")
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // the master is a deployment setting, so SPARK_MASTER picks it
+  private def session(): SparkSession = graft.GraftSession.localSession(
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+    master = Some(sys.env.getOrElse("SPARK_MASTER", "local[*]")))
 
   def main(args: Array[String]): Unit = args.toList match {
     case "clean" :: in :: out :: Nil =>

@@ -1,94 +1,25 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
-/** Native Catalyst expressions for the vector hot path.
-  *
-  * The declarative form — `aggregate(zip_with(a, b, (x,y) -> x*y), 0.0,
-  * (acc,x) -> acc+x)` — is semantically right but interprets a boxed
-  * lambda frame per element; on the q20 all-pairs join (4M pairs × 64
-  * dims at sf0.1) it spends 40+ s in HOF evaluation. These expressions
-  * keep the exact same strict left-fold arithmetic (bit parity with the
-  * DuckDB oracle) but compile to a primitive double loop inside
-  * whole-stage codegen — no boxing, no per-element closures.
-  *
-  * This is preference order (b) from the build contract: a custom
-  * `Expression` with `doGenCode`, well before reaching for a custom
-  * physical operator. Registered as SQL functions because Spark 4's
-  * Column API no longer exposes `Column.expr` publicly; callers use
-  * `expr("dot_product(a, b)")` after [[VectorExpressions.register]].
-  */
-object VectorExpressions {
-
-  /** Idempotent per-session registration of dot_product / vec_norm.
-    * Short-circuits when already registered — every catalog query calls
-    * this, and re-registration logs a "replaced a previously registered
-    * function" warning per function per query (hundreds of lines in a
-    * Verify/Bench run).
-    */
-  def register(spark: SparkSession): Unit = {
-    // session-level twin of GraftExtensions' injectOptimizerRule: fuse
-    // declarative aggregate(zip_with(...)) folds into native loops.
-    // Checked BEFORE the function short-circuit — the rule list and the
-    // function registry can diverge (a test or caller may strip the rule
-    // while the functions stay registered), and this membership check is
-    // warning-free either way.
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.FuseZipFold))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.FuseZipFold
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product"))) return
-    reg.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProductExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "vec_norm", exprs => VecNormExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHashExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "h60", exprs => H60Expr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingles", exprs => ShinglesExpr(exprs(0), literalInt(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction(
-      "count_in", exprs =>
-        CountInExpr(exprs.head, exprs.tail.map(literalString)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_sigs", exprs => MinHashSigsExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash60", exprs => SimHash60Expr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "subword_count", exprs =>
-        SubwordCountExpr(exprs.head, SubwordVocab.Default), "built-in")
-    reg.createOrReplaceTempFunction(
-      "subword_tokenize", exprs =>
-        SubwordTokenizeExpr(exprs.head, SubwordVocab.Default), "built-in")
-  }
-
-  /** The shingle width must be a compile-time constant (it is baked into
-    * the generated code), so only integer literals are accepted.
-    */
-  def literalInt(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other =>
-      throw new IllegalArgumentException(
-        s"shingles(words, n) needs a literal int width, got: $other")
-  }
-
-  /** count_in's member set is baked into the operator at plan time, so
-    * only string literals are accepted.
-    */
-  def literalString(e: Expression): String = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: org.apache.spark.unsafe.types.UTF8String, _) =>
-      v.toString
-    case other =>
-      throw new IllegalArgumentException(
-        s"count_in(arr, members…) needs literal string members, got: $other")
-  }
-}
+/* Native Catalyst expressions for the vector hot path.
+ *
+ * The declarative form — `aggregate(zip_with(a, b, (x,y) -> x*y), 0.0,
+ * (acc,x) -> acc+x)` — is semantically right but interprets a boxed
+ * lambda frame per element; on the q20 all-pairs join (4M pairs × 64
+ * dims at sf0.1) it spends 40+ s in HOF evaluation. These expressions
+ * keep the exact same strict left-fold arithmetic (bit parity with the
+ * DuckDB oracle) but compile to a primitive double loop inside
+ * whole-stage codegen — no boxing, no per-element closures.
+ *
+ * A custom `Expression` with `doGenCode` is the lighter native option,
+ * well before reaching for a custom physical operator. Registered as SQL functions by
+ * [[graft.GraftExtensions]] because Spark 4's Column API no longer
+ * exposes `Column.expr` publicly; callers use `expr("dot_product(a, b)")`.
+ */
 
 /** dot(a, b) = ((0 + a0·b0) + a1·b1) + … — strict sequential fold over
   * two array<double> columns (callers guarantee the element type).

@@ -2,17 +2,15 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
-import graft.plans.{TopKPerGroup, TopKPerGroupStrategy}
+import graft.plans.TopKPerGroup
 
 /** Library API for the custom top-k-per-group operator
   * ([[graft.plans.TopKPerGroupExec]]): same contract as
   * `row_number().over(partitionBy(group).orderBy(order)) <= k`, executed
   * as one streaming group-scan instead of window + filter.
   *
-  * Self-registering: adds the planner strategy through the PUBLIC
-  * `spark.experimental.extraStrategies` seam on first use, so callers
-  * need no session-construction ceremony (the `GraftExtensions` path
-  * registers it too, for packaged deployments).
+  * The node is planned by [[graft.plans.TopKPerGroupStrategy]], which
+  * [[graft.GraftExtensions]] installs when the session is built.
   */
 object TopK {
 
@@ -23,10 +21,6 @@ object TopK {
       k: Int,
       rankName: String = "rn"): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
-    }
     val analyzed = df.queryExecution.analyzed
     // Match the analyzer's binding semantics: resolve names with the
     // session's resolver (case-insensitive by default) and reject

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.HIGH_ORDER_FUNCTION
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.functions.{ZipFoldProduct, ZipFoldSqDiff}
@@ -20,17 +21,18 @@ import graft.functions.{ZipFoldProduct, ZipFoldSqDiff}
   * null semantics (see ZipFoldBase), so the rewrite is observationally
   * pure — including for the bit-exact DuckDB oracle comparison.
   *
-  * Registered two ways: `injectOptimizerRule` in
-  * [[graft.GraftExtensions]] (library path) and
-  * `spark.experimental.extraOptimizations` in
-  * [[graft.functions.VectorExpressions.register]] (imperative path) —
-  * both run after the main optimizer batches, when constant folding has
-  * already reduced the zero literal.
+  * Installed by `injectOptimizerRule` in [[graft.GraftExtensions]], so
+  * it runs inside the fixed-point operator-optimization batches next to
+  * constant folding: a zero seed written as `CAST(0 AS DOUBLE)` is folded
+  * to a literal in one iteration and matched in the next. Excludable by
+  * name through `spark.sql.optimizer.excludedRules`.
   */
 object FuseZipFold extends Rule[LogicalPlan] {
 
+  // runs on every iteration of the fixed-point batches, so plans without
+  // a higher-order function are skipped on their tree-pattern bits
   override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
+    plan.transformAllExpressionsWithPruning(_.containsPattern(HIGH_ORDER_FUNCTION)) {
       case agg: ArrayAggregate => fuse(agg).getOrElse(agg)
     }
 

@@ -220,8 +220,8 @@ final case class TopKPerGroupPartialExec(
 }
 
 /** Plans the logical node; everything else falls through to the built-in
-  * strategies. Injected via `spark.experimental.extraStrategies` (public
-  * API, used by [[graft.ops.TopK]]) or `GraftExtensions`.
+  * strategies. Installed by [[graft.GraftExtensions]] when the session
+  * is built.
   *
   * `spark.graft.topk.partial` (default on) inserts the map-side partial
   * prune below the final operator; the exchange the final node's

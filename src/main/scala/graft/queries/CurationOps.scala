@@ -566,7 +566,6 @@ object CurationOps {
   // deterministic-split trick) instead of full-batch.
   // ---------------------------------------------------------------------
   private def q143(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s) // count_in
     val ft = docs(s, dir)
       .withColumn("w", split(col("text"), " "))
       .select(
@@ -738,7 +737,6 @@ object CurationOps {
   // broadcast aggregates (q143's rounds), one broadcast re-score
   // projection; only the decile ntile is presentation-scale.
   private def q198(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s) // count_in
     val ft = docs(s, dir)
       .withColumn("w", split(col("text"), " "))
       .select(col("doc_id"),

@@ -874,24 +874,18 @@ object ScaleOps {
       order: Seq[Column]): DataFrame = {
     val q = rows / buckets
     val r = rows % buckets
-    // storage of the sorted pass is conf-switchable for same-boot A/B
-    // (VERDICT r11 item 7 — q192 runs this three times per invocation):
-    // "persist" = GlobalIndex's MEMORY_AND_DISK level, "none" = no
-    // storage, the second pass re-sorts over the reused shuffle files.
-    // Default `none` by the r12 7-vs-7 interleaved A/B on q192 (per-rep
-    // mins 3.347 s vs persist 3.934 s, −15%; medians −8%): at audit
-    // scale the re-sort over reused shuffle files is cheaper than
-    // holding three lineitem-sized sorted passes in storage memory, and
-    // zero storage is immune to suite cache pressure (ARCHITECTURE
-    // §8.7). The write-once ETL path keeps GlobalIndex's persist — one
-    // sorted pass, immediately consumed, no in-session accumulation.
-    val arm = df.sparkSession.conf.get("spark.graft.ntile.storage", "none")
-    require(Set("persist", "none").contains(arm),
-      s"spark.graft.ntile.storage must be persist|none, got '$arm'")
-    val level =
-      if (arm == "persist") org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      else org.apache.spark.storage.StorageLevel.NONE
-    val ranked = graft.ops.GlobalIndex.withDenseIndex(df, "_g_rank", order, level)
+    // the sorted pass is stored nowhere: the second pass re-sorts over
+    // the reused shuffle files. The r12 7-vs-7 interleaved A/B on q192
+    // (which runs this three times per invocation) chose that over
+    // GlobalIndex's MEMORY_AND_DISK persist — per-rep mins 3.347 s vs
+    // persist 3.934 s, −15%; medians −8%: at audit scale the re-sort is
+    // cheaper than holding three lineitem-sized sorted passes in storage
+    // memory, and zero storage is immune to suite cache pressure
+    // (ARCHITECTURE §8.7). The write-once ETL path keeps GlobalIndex's
+    // persist — one sorted pass, immediately consumed, no in-session
+    // accumulation.
+    val ranked = graft.ops.GlobalIndex.withDenseIndex(df, "_g_rank", order,
+      org.apache.spark.storage.StorageLevel.NONE)
     val chunk =
       if (q == 0) col("_g_rank") // fewer rows than buckets: one row each
       else when(col("_g_rank") <= lit(r * (q + 1)),

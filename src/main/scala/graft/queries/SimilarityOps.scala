@@ -27,7 +27,6 @@ import graft.QueryDef
 object SimilarityOps {
 
   private def withNorm(s: SparkSession, df: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     // single-file parquet → one input partition; spread the probe side so
     // the O(n·k·d) dot-product work runs at full task parallelism
     df.repartition(s.sessionState.conf.numShufflePartitions)
@@ -174,7 +173,6 @@ object SimilarityOps {
     * fold: (vec_id, vm array<double> of integer values).
     */
   private def microVecs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     load(s, dir, "embeddings")
       .repartition(s.sessionState.conf.numShufflePartitions)
       .select(col("vec_id"),
@@ -1068,7 +1066,6 @@ object SimilarityOps {
   // ARE the receipt a pipeline gates on before any similarity work.
   // Anti-join + narrow scans; nothing shuffles more than the id sets.
   private def q172(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     val d = load(s, dir, "documents").select(col("doc_id"))
     val e = load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))

@@ -46,24 +46,6 @@ object TextOps {
 
   private def words(c: Column): Column = split(c, " ")
 
-  /** Conf-switchable storage for a hot query's multi-consumer
-    * intermediate (VERDICT r11 item 7, extending q194's r11 experiment):
-    * "cache" persists the frame, "none" recomputes it and leans on
-    * ReuseExchange deduping its shuffles inside the one final plan —
-    * zero storage means nothing to thrash under suite memory pressure,
-    * which the q194 A/B proved can beat caching. Each query's `default`
-    * is its same-boot BenchOne A/B winner (ARCHITECTURE §8.5); the
-    * require fails loud on a typo'd arm so an A/B invocation cannot
-    * silently measure the wrong variant.
-    */
-  private def keepArm(s: SparkSession, conf: String, default: String)(
-      df: DataFrame): DataFrame = {
-    val v = s.conf.get(conf, default)
-    require(Set("cache", "none").contains(v),
-      s"$conf must be cache|none, got '$v'")
-    if (v == "cache") df.cache() else df
-  }
-
   /** documents arrives as a single parquet file → one input partition,
     * which serializes all per-row shingle/hash work onto one task.
     * Spread it across the session's shuffle parallelism first — one
@@ -72,7 +54,6 @@ object TextOps {
     * decision; the knob that matters there is maxPartitionBytes.)
     */
   private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     load(s, dir, "documents")
       .repartition(s.sessionState.conf.numShufflePartitions)
   }
@@ -164,7 +145,6 @@ object TextOps {
     * (~3 s of its ~4.6 s at sf0.1).
     */
   private def shingled(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     docs(s, dir)
       .select(col("doc_id"), words(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
@@ -980,7 +960,6 @@ object TextOps {
   // join, and the corpus-side work is q129's partial-agg shuffles plus
   // one narrow O(n·d) scoring pass over the vectors.
   private def q135(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     // lexical top-50: TakeOrdered first, then rank the 50 survivors
     // (row_number over a 50-row frame, not a global window)
     val lex50 = bm25Scores(s, dir)
@@ -1759,15 +1738,14 @@ object TextOps {
     val base = clusters.join(naive, "doc_id")
     val reps = base.filter(col("doc_id") === col("cluster_id"))
       .select(col("cluster_id"), col("naive_split").as("group_split"))
-    // consumed twice (straddle agg + split rollup); cache-vs-none is
-    // conf-switchable for same-boot A/B — see keepArm. Default `none`:
-    // the r12 7-vs-7 interleaved A/B read a dead heat on per-rep mins
-    // (cache 3.214 s vs none 3.218 s, medians 3.48 vs 3.42 — the CC
-    // labels both consumers share are already localCheckpointed, so the
-    // recompute is join-cheap), and zero storage cannot thrash under
-    // suite memory pressure (ARCHITECTURE §8.7).
-    val a = keepArm(s, "spark.graft.q147.storage", "none")(
-      base.join(reps, "cluster_id"))
+    // consumed twice (straddle agg + split rollup) and stored nowhere:
+    // the r12 7-vs-7 interleaved A/B against caching it read a dead heat
+    // on per-rep mins (cache 3.214 s vs none 3.218 s, medians 3.48 vs
+    // 3.42 — the CC labels both consumers share are already
+    // localCheckpointed, so the recompute is join-cheap), and zero
+    // storage cannot thrash under suite memory pressure (ARCHITECTURE
+    // §8.7).
+    val a = base.join(reps, "cluster_id")
     val strad = a.groupBy(col("cluster_id"))
       .agg(countDistinct(col("naive_split")).as("ns"),
         countDistinct(col("group_split")).as("gs"))
@@ -2730,13 +2708,12 @@ object TextOps {
     // and its own stage count; historically uncached (the CC labels are
     // already localCheckpointed, so recompute is join-cheap). The r12
     // 7-vs-7 interleaved A/B confirms: none 4.237 s vs cache 4.362 s on
-    // per-rep mins, −5% on medians — `none` stays the default
-    // (ARCHITECTURE §8.7).
-    val keep3 = keepArm(s, "spark.graft.q171.storage", "none")(
-      cl.withColumn("rn", row_number().over(
+    // per-rep mins, −5% on medians — it stays uncached (ARCHITECTURE
+    // §8.7).
+    val keep3 = cl.withColumn("rn", row_number().over(
         Window.partitionBy(col("cluster_id"))
           .orderBy(col("ttr").desc, col("n_chars").desc, col("doc_id").asc)))
-      .filter(col("rn") === 1).drop("rn"))
+      .filter(col("rn") === 1).drop("rn")
     val ratios = shingleStream(
         docs(s, dir).join(keep3.select(col("doc_id")), "doc_id"))
       .join(broadcast(te), Seq("shingle"), "left")
@@ -2872,7 +2849,6 @@ object TextOps {
   // in DuckDB via a character fold, plus a BPE-ish regex token count
   // alongside the whitespace count (the two tokenizer baselines).
   private def q26(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     docs(s, dir).select(
       col("doc_id"),
       expr("rolling_hash(text)").as("fingerprint"),
@@ -3363,7 +3339,6 @@ object TextOps {
   // both vec_id equi-joins and the embeddings table never shuffles —
   // the all-pairs cosine blowup (q32's baseline) is never touched.
   private def q84(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     val e = load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", expr("vec_norm(v)"))
@@ -3967,37 +3942,22 @@ object TextOps {
   // posting lists; the truth side explodes only the 1-in-20 probe
   // sample against the shingle index; ranks come from one
   // (q, doc)-grouped count — no window over the corpus.
-  // Storage strategy is conf-switchable for same-boot A/B (r11: the
-  // query's 1.65/3.59/4.12 s same-code spread across three boots was
-  // the catalog's largest, and the suspect was cache thrash under the
-  // full suite's memory pressure — VERDICT r10 item 2):
-  //   cache — the r10 form: sh/ex/tf/scored all cached.
-  //   lean  — cache only the two frames with 3+ distinct consumers
-  //           (sh, ex); tf and scored recompute, letting ReuseExchange
-  //           dedupe their shuffles inside the one final plan.
-  //   none  — no storage at all; pure exchange-reuse.
-  // Default NONE, chosen by a 7-vs-7 fine-interleaved BenchOne A/B at
-  // sf0.1/local[32] (r11): per-run mins, none median 6.44 s vs cache
-  // 10.75 s (-40%), equal best case (5.35 vs 5.41) — and with zero
-  // storage the query CANNOT thrash under suite memory pressure, which
-  // was the variance mechanism. All three variants return identical
-  // rows (checked at sf0.01). ARCHITECTURE §8.5 has the full table.
+  // Storage: none — every shared frame recomputes and ReuseExchange
+  // dedupes its shuffles inside the one final plan. A 7-vs-7
+  // fine-interleaved A/B at sf0.1/local[32] (r11) chose it over caching
+  // sh/ex/tf/scored (all four, or only sh/ex): per-run mins, none median
+  // 6.44 s vs cache 10.75 s (-40%), equal best case (5.35 vs 5.41) — and
+  // with zero storage the query CANNOT thrash under suite memory
+  // pressure, which was the variance mechanism. All three variants
+  // returned identical rows (checked at sf0.01). ARCHITECTURE §8.5 has
+  // the full table.
   private def q194(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val variant = s.conf.get("spark.graft.q194.storage", "none")
-    // fail loud on a typo'd arm (ADVICE r11): a BenchOne A/B that asks
-    // for "Cache" must not silently measure the no-storage behavior
-    // while appearing to measure the cache arm
-    require(Set("cache", "lean", "none").contains(variant),
-      s"spark.graft.q194.storage must be cache|lean|none, got '$variant'")
-    def keep(df: DataFrame, tiers: Set[String]): DataFrame =
-      if (tiers.contains(variant)) df.cache() else df
-    val sh = keep(shingled(s, dir), Set("cache", "lean"))
-    val ex = keep(sh.select(col("doc_id"), explode(col("shingles")).as("shingle")),
-      Set("cache", "lean"))
+    val sh = shingled(s, dir)
+    val ex = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
     val nsh = sh.select(col("doc_id"), size(col("shingles")).cast("long").as("n_sh"))
-    val tf = keep(ex.groupBy(col("doc_id"), col("shingle"))
-      .agg(count(lit(1)).as("tf")), Set("cache"))
+    val tf = ex.groupBy(col("doc_id"), col("shingle"))
+      .agg(count(lit(1)).as("tf"))
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       expr("sum(dl) div count(1)").as("avgdl"))
@@ -4026,7 +3986,7 @@ object TextOps {
         Window.partitionBy(col("q")).orderBy(col("df").asc, col("shingle").asc)))
       .filter(col("r") <= 5)
       .select(col("q"), col("shingle"))
-    val scored = keep(tf.join(qterms, Seq("shingle"))
+    val scored = tf.join(qterms, Seq("shingle"))
       .filter(col("doc_id") =!= col("q"))
       .join(dfreq, Seq("shingle")).join(dl, Seq("doc_id"))
       .crossJoin(broadcast(stats))
@@ -4035,12 +3995,12 @@ object TextOps {
           "* 22 * tf * avgdl div (10 * tf * avgdl + 3 * avgdl + 9 * dl)")
           .as("contrib"))
       .groupBy(col("q"), col("doc_id"))
-      .agg(sum(col("contrib")).as("score")), Set("cache"))
+      .agg(sum(col("contrib")).as("score"))
     // r14: the truth row's rank IS its row_number in (score desc,
     // doc_id asc) order — one window over scored replaces the old
     // tscore join + better join + groupBy chain, which consumed scored
-    // TWICE (and under the default no-storage arm recomputed its whole
-    // BM25 subtree per consumer). Tie semantics identical: the old
+    // TWICE (and, stored nowhere, recomputed its whole BM25 subtree per
+    // consumer). Tie semantics identical: the old
     // count of {score > ts OR (score = ts AND doc_id < truth_id)} + 1
     // is exactly row_number under this ordering; a truth doc absent
     // from scored yields no rank row in both forms.
@@ -4241,13 +4201,15 @@ object TextOps {
       .select(col("doc_id").as("id"),
         (col("band_idx").cast("long") * 32768L + col("band_val")).as("bucket"))
     // consumed by both sides of the audit self-join and the length
-    // table; cache-vs-none conf-switchable for same-boot A/B (keepArm).
-    // Default stays `cache`: the r12 7-vs-7 interleaved A/B read per-rep
-    // mins cache 3.663 s vs none 3.928 s (+7% for none) — unlike q194,
-    // the shingle stream here feeds a SELF-join, and recomputing both
-    // sides costs more than the cached frame's storage risk
-    // (ARCHITECTURE §8.7).
-    val sh = keepArm(s, "spark.graft.q196.storage", "cache")(shingled(s, dir))
+    // table, all inside the pair audit's checkpoint job below, so it is
+    // cached: unlike q194, the shingle stream here feeds a SELF-join,
+    // and recomputing both sides costs more than the cached frame's
+    // storage risk. Two same-boot 7-vs-7 interleaved A/Bs on 4 cores at
+    // sf0.1 read cache 3.457 / none 3.354 s and cache 2.506 / none
+    // 2.717 s on per-rep mins, with cache ahead on both medians (3.840
+    // vs 4.144 s, 3.517 vs 3.594 s); r12 on 32 cores read cache 3.663 s
+    // vs none 3.928 s (ARCHITECTURE §8.7).
+    val sh = shingled(s, dir).cache()
     val ex = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
     val nsh = sh.select(col("doc_id"), size(col("shingles")).cast("long").as("n_sh"))
     val pairJac = ex.filter(col("doc_id") % 5 === 0).as("a")

@@ -165,7 +165,6 @@ object DocStreams {
       ttl: Option[java.time.Duration] = None): DataFrame = {
     import spark.implicits._
     EventStreams.withRocksDBStateStore(spark)
-    graft.functions.VectorExpressions.register(spark)
     val banded = graft.ops.MinHash.withBands(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id"), posexplode(array(
         (0 until graft.ops.MinHash.NumBands).map(i => col(s"band$i")): _*))

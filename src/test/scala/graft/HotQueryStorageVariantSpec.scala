@@ -2,105 +2,56 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** r12 (VERDICT r11 item 7): q194's storage experiment generalized to
-  * the next-largest cached hot queries — q147/q196 (cache default),
-  * q171 (none default), and q192's ntile sorted-pass persist. The
-  * switch is only sound if every arm computes the same rows; this pins
-  * it at sf0.001 so an edit to one arm's lineage cannot silently
-  * diverge. The DEFAULT of each conf is pinned structurally elsewhere
-  * in each test (unknown values fail loud per the query-side require).
+/** Storage pins for the hot queries whose storage was settled by
+  * same-boot A/B (ARCHITECTURE §8.5, §8.7): q147, q171 and q194 store
+  * nothing, q192's ntile sorted pass stores nothing, and q196 caches its
+  * shingle frame. A row compare can never catch a silent flip between
+  * storing and recomputing, so each pin is structural.
   */
 class HotQueryStorageVariantSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def rows(name: String, conf: String, variant: Option[String]): Seq[String] = {
-    variant match {
-      case Some(v) => spark.conf.set(conf, v)
-      case None => spark.conf.unset(conf)
-    }
-    try SparkEntry.queries(name)(spark, dir).collect().map(_.toString).toSeq.sorted
-    finally {
-      spark.conf.unset(conf)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+  private def dropStorage(): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
   }
 
-  private def pinArms(name: String, conf: String, arms: Seq[String]): Unit = {
-    val default = rows(name, conf, None)
-    assert(default.nonEmpty, s"$name returned no rows")
-    arms.foreach { arm =>
-      assert(rows(name, conf, Some(arm)) == default,
-        s"$name arm '$arm' diverged from the default arm")
-    }
-    val e = intercept[IllegalArgumentException] {
-      rows(name, conf, Some("Cache"))
-    }
-    assert(e.getMessage.contains(conf), s"$name: typo'd arm must fail loud")
-  }
-
-  test("q147 cache/none arms return identical rows; typo fails loud") {
-    pinArms("q147_split_leakage", "spark.graft.q147.storage", Seq("cache", "none"))
-  }
-
-  test("q171 cache/none arms return identical rows; typo fails loud") {
-    pinArms("q171_training_funnel", "spark.graft.q171.storage", Seq("cache", "none"))
-  }
-
-  test("q196 cache/none arms return identical rows; typo fails loud") {
-    pinArms("q196_cluster_separation", "spark.graft.q196.storage", Seq("cache", "none"))
-  }
-
-  // Structural default pins (the q194 lesson: a row-compare between
-  // arms can never catch a silently flipped default, because the arms
-  // are row-equal by design). With the conf unset, the cache-defaulted
-  // query must carry an InMemoryRelation and the none-defaulted ones
-  // must not.
-  test("defaults are pinned structurally: q147/q171 store nothing, q196 caches") {
+  test("q147, q171 and q194 store nothing: no InMemoryRelation") {
     def planOf(name: String): String = {
       spark.catalog.clearCache()
       SparkEntry.queries(name)(spark, dir).queryExecution.optimizedPlan.toString
     }
-    Seq("spark.graft.q147.storage", "spark.graft.q171.storage",
-      "spark.graft.q196.storage").foreach(spark.conf.unset)
-    try {
-      assert(!planOf("q147_split_leakage").contains("InMemoryRelation"),
-        "q147's A/B-chosen default is none")
-      assert(!planOf("q171_training_funnel").contains("InMemoryRelation"),
-        "q171's A/B-chosen default is none")
-      assert(planOf("q196_cluster_separation").contains("InMemoryRelation"),
-        "q196's A/B-chosen default is cache")
+    try Seq("q147_split_leakage", "q171_training_funnel", "q194_mrr_eval").foreach { n =>
+      assert(!planOf(n).contains("InMemoryRelation"),
+        s"$n cached a frame — its A/B-chosen storage is none")
     } finally spark.catalog.clearCache()
+  }
+
+  test("q196 caches its shingle frame where the pair audit consumes it") {
+    // the cached frame is read only inside Overlap.frames' eager pair-
+    // audit checkpoint job, so the pin is on the storage that job leaves
+    // behind, not on the final plan (which no longer reads the frame)
+    dropStorage()
+    try {
+      SparkEntry.queries("q196_cluster_separation")(spark, dir)
+      assert(!spark.sharedState.cacheManager.isEmpty,
+        "q196's A/B-chosen storage is cache")
+      assert(spark.sparkContext.getRDDStorageInfo.exists(i =>
+          i.name.contains("shingles(") && i.numCachedPartitions > 0),
+        "q196's shingle frame was not materialized in the cache")
+    } finally dropStorage()
   }
 
   test("ntile default is pinned structurally: no persisted RDD remains") {
     // q192's sorted pass is RDD-level storage (invisible to the SQL
-    // plan), so the pin is on the session's persistent-RDD registry:
-    // with the conf unset the `none` default must leave it empty after
-    // a full evaluation. (q192's lineage has no other persist/
-    // localCheckpoint site.)
-    spark.conf.unset("spark.graft.ntile.storage")
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    // plan), so the pin is on the session's persistent-RDD registry: it
+    // must be empty after a full evaluation. (q192's lineage has no
+    // other persist/localCheckpoint site.)
+    dropStorage()
     assert(SparkEntry.queries("q192_hilbert_layout")(spark, dir).collect().nonEmpty)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      "q192's ntile default must be the no-persist arm")
-  }
-
-  test("q192 ntile persist/none arms return identical rows; typo fails loud") {
-    val conf = "spark.graft.ntile.storage"
-    val default = rows("q192_hilbert_layout", conf, None)
-    assert(default.nonEmpty)
-    Seq("persist", "none").foreach { arm =>
-      assert(rows("q192_hilbert_layout", conf, Some(arm)) == default,
-        s"q192 arm '$arm' diverged from the default arm")
-    }
-    val e = intercept[IllegalArgumentException] {
-      rows("q192_hilbert_layout", conf, Some("Persist"))
-    }
-    assert(e.getMessage.contains(conf))
+      "q192's ntile sorted pass must not be persisted")
   }
 }

@@ -3,17 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (Test / fork := true keeps it
-  * in the test JVM). Mirrors the Verify/Bench session config so tests see
-  * the same semantics as the driver gate (UTC, nanos-as-long).
+  * in the test JVM), built by the same [[GraftSession.localSession]] as
+  * Verify and Bench, so tests see the same extensions and semantics
+  * (UTC, nanos-as-long).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = GraftSession.tune(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.localSession("4")
 }

@@ -8,7 +8,6 @@ class ShinglesExprSpec extends AnyFunSuite {
 
   private def shingle(texts: Seq[String], n: Int): Seq[Seq[String]] = {
     import spark.implicits._
-    VectorExpressions.register(spark)
     texts.toDF("text")
       .selectExpr("split(text, ' ') AS w")
       .selectExpr(s"shingles(w, $n) AS sh")
@@ -19,7 +18,6 @@ class ShinglesExprSpec extends AnyFunSuite {
 
   test("3-gram shingles match the declarative HOF form") {
     import spark.implicits._
-    VectorExpressions.register(spark)
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog",
       "a b c d",
@@ -49,7 +47,6 @@ class ShinglesExprSpec extends AnyFunSuite {
 
   test("non-literal width is rejected") {
     import spark.implicits._
-    VectorExpressions.register(spark)
     val e = intercept[Exception] {
       Seq("a b c").toDF("text")
         .selectExpr("split(text, ' ') AS w")

@@ -14,7 +14,6 @@ class SimHashSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("fused signatures equal the exploded pipeline on real data") {
-    VectorExpressions.register(spark)
     val d = graft.Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     def keyed(df: org.apache.spark.sql.DataFrame) =
@@ -26,7 +25,6 @@ class SimHashSpec extends AnyFunSuite {
   }
 
   test("edge cases: occurrence multiset votes, ties unset, null text dropped") {
-    VectorExpressions.register(spark)
     import spark.implicits._
     val docs = Seq(
       (1L, "alpha"),                  // single token → sig == h60 bits
@@ -48,7 +46,6 @@ class SimHashSpec extends AnyFunSuite {
   }
 
   test("SQL registration: simhash60(words) is callable and agrees") {
-    VectorExpressions.register(spark)
     val viaSql = spark.sql(
       "SELECT simhash60(split('alpha alpha beta', ' ')) AS s").head().getLong(0)
     val hA = spark.sql("SELECT h60('alpha')").head().getLong(0)

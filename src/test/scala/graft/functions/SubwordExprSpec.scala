@@ -39,7 +39,6 @@ class SubwordExprSpec extends AnyFunSuite {
   }
 
   test("count equals tokenize length on real documents") {
-    graft.functions.VectorExpressions.register(spark)
     val got = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(expr("subword_count(text)").as("n"),
         size(expr("subword_tokenize(text)")).cast("long").as("m"))
@@ -49,7 +48,6 @@ class SubwordExprSpec extends AnyFunSuite {
 
   test("codegen and interpreted paths agree; nulls propagate") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val df = Seq(Some("the table value dup"), None).toDF("t")
     val rows = df.select(expr("subword_count(t)").as("n"),
       expr("subword_tokenize(t)").as("toks")).collect()

@@ -14,7 +14,6 @@ class MinHashSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("per-row signatures equal the gated q17 pipeline on real data") {
-    graft.functions.VectorExpressions.register(spark)
     val cols = Seq("n_shingles") ++
       (0 to 7).map(i => s"sig$i") ++ (0 to 3).map(b => s"band$b")
     def keyed(df: org.apache.spark.sql.DataFrame) =
@@ -28,7 +27,6 @@ class MinHashSpec extends AnyFunSuite {
   }
 
   test("edge cases: 3-word docs get one shingle; shorter docs are excluded") {
-    graft.functions.VectorExpressions.register(spark)
     import spark.implicits._
     val docs = Seq(
       (1L, "alpha beta gamma"),          // exactly one 3-shingle
@@ -66,7 +64,6 @@ class MinHashSpec extends AnyFunSuite {
   }
 
   test("minhash_sigs returns null below 3 words and exact distinct counts") {
-    graft.functions.VectorExpressions.register(spark)
     import spark.implicits._
     val out = Seq(
       (1L, "a b"),                 // 2 words -> null struct

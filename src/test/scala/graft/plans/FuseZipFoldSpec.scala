@@ -12,10 +12,15 @@ class FuseZipFoldSpec extends AnyFunSuite {
   private val sqHof =
     "aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
 
+  // file-backed: ConvertToLocalRelation evaluates a projection over a
+  // local relation before FuseZipFold could rewrite it; one file keeps
+  // the row order
   private def frame(rows: Seq[(Seq[java.lang.Double], Seq[java.lang.Double])]) = {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
-    rows.toDF("a", "b")
+    val path = java.nio.file.Files.createTempDirectory("fuse-zip-fold")
+      .resolve("frame").toString
+    rows.toDF("a", "b").coalesce(1).write.parquet(path)
+    spark.read.parquet(path)
   }
 
   private val data: Seq[(Seq[java.lang.Double], Seq[java.lang.Double])] = Seq(
@@ -29,7 +34,6 @@ class FuseZipFoldSpec extends AnyFunSuite {
 
   test("fused plans replace the HOF with zip_fold expressions") {
     // must be file-backed: local relations are eagerly folded away
-    graft.functions.VectorExpressions.register(spark)
     val df = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
       .selectExpr("cast(embedding AS array<double>) AS a",
@@ -42,11 +46,11 @@ class FuseZipFoldSpec extends AnyFunSuite {
   }
 
   test("fused results are bit-identical to the HOF, nulls included") {
-    // compute the unfused reference with the rule disabled
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == FuseZipFold)
-    val want = frame(data).selectExpr(s"$dotHof AS d", s"$sqHof AS s").collect()
-    graft.functions.VectorExpressions.register(spark) // re-adds the rule
+    // compute the unfused reference with the rule excluded
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.FuseZipFold")
+    val want =
+      try frame(data).selectExpr(s"$dotHof AS d", s"$sqHof AS s").collect()
+      finally spark.conf.unset("spark.sql.optimizer.excludedRules")
     val got = frame(data).selectExpr(s"$dotHof AS d", s"$sqHof AS s").collect()
     assert(got.toSeq == want.toSeq)
     // spot-check semantics directly

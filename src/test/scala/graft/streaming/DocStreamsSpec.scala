@@ -71,7 +71,6 @@ class DocStreamsSpec extends AnyFunSuite {
     * [[graft.ops.MinHash.withBands]] signatures).
     */
   private def bandJoinTruth: Set[(Long, Long)] = {
-    graft.functions.VectorExpressions.register(spark)
     val ex = graft.ops.MinHash.withBands(
         graft.Tables.load(spark, dir, "documents").select(col("doc_id"), col("text")))
       .select(col("doc_id"), explode(array((0 until graft.ops.MinHash.NumBands)
