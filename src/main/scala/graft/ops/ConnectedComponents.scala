@@ -25,11 +25,13 @@ import org.apache.spark.sql.functions._
   *     components that share a root share that node. Per-partition state
   *     is O(rows in the partition), which AQE's advisory partition bytes
   *     bound — never O(graph).
-  *  2. GLOBAL FIXPOINT — the unchanged distributed rounds on the
-  *     contracted relation. They do real work only for components that
-  *     span partitions; when AQE coalesces the relation to one partition
-  *     (every benchmark-scale input) phase 1 is already the answer and
-  *     phase 2 is one confirming iteration. Across many partitions each
+  *  2. GLOBAL FIXPOINT — the distributed rounds on the contracted
+  *     relation, run only when it spans more than one partition. When
+  *     AQE coalesces the relation to one partition (every input below
+  *     the advisory partition size, which covers every benchmark-scale
+  *     input) phase 1's union-find saw every bucket / edge, so its local
+  *     roots ARE the component minima and the operator returns them
+  *     without starting a phase-2 job. Across many partitions each
   *     local component collapses to one hop, so no distance in the
   *     contracted graph exceeds its distance in the input and phase 2
   *     needs at most the rounds the single-phase fixpoint needed.
@@ -82,6 +84,16 @@ object ConnectedComponents {
     /** (node, component min) for every node added. */
     def labels: Iterator[(Long, Long)] = parent.keysIterator.map(x => (x, find(x)))
   }
+
+  /** True when phase 1 ran as ONE partition: its union-find then saw
+    * every bucket / edge, so the local roots are the component minima
+    * and phase 2 has nothing to join. Reads the width of the lazily
+    * checkpointed frame's already-planned RDD, which starts no job —
+    * AQE ran the keyed exchange's map stage, and so fixed the width,
+    * when the checkpoint built that RDD.
+    */
+  private def phaseOneSawAll(contracted: DataFrame): Boolean =
+    contracted.queryExecution.toRdd.getNumPartitions <= 1
 
   /** Path compression — label(x) ← min(label(x), label(label(x))).
     * Labels are always ids of component members, so the lookup stays
@@ -142,17 +154,20 @@ object ConnectedComponents {
     * inside one partition) and unions each partition's co-members; the
     * contracted relation is (id, local root), one row per id per
     * partition it occurs in, the local root serving as the new bucket.
-    * Phase 2 then iterates on it: one round = id→bucket-min→id (two
+    * At one partition that relation already is the answer (one row per
+    * id, local root = component min) and is returned as (id, label).
+    * Otherwise phase 2 iterates on it: one round = id→bucket-min→id (two
     * partial-agg min shuffles), i.e. a FULL round of the pair graph over
     * the contracted relation, so rounds track the contracted pair-graph
     * diameter — at most the input's, and 0 once phase 1 has met every
-    * component whole (one confirming iteration, e.g. at one partition).
+    * component whole (one confirming iteration).
     */
   def labelViaBuckets(members: DataFrame, maxRounds: Int = 50): DataFrame = {
     val sp = members.sparkSession
     import sp.implicits._
-    // lazy checkpoint: the seed round's first action materializes it
-    // (one fewer standalone job; see the fixpoint note).
+    // lazy checkpoint: the first action on it materializes it — the seed
+    // round's, or at one partition the caller's (one fewer standalone
+    // job; see the fixpoint note).
     // The keyed repartition (no explicit N — AQE picks the width from
     // bytes) does two jobs: (a) the partition count scales with DATA, not
     // with the session's parallelism — without it every fixpoint round
@@ -174,6 +189,7 @@ object ConnectedComponents {
       }
       .toDF("id", "bucket")
       .localCheckpoint(eager = false)
+    if (phaseOneSawAll(mem)) return mem.withColumnRenamed("bucket", "label")
     // r14, two join eliminations with the identical fixpoint:
     //  - the old per-round label-update join (labels ⋈ viaBuckets +
     //    least/coalesce) is REDUNDANT in the membership form — every id
@@ -259,9 +275,10 @@ object ConnectedComponents {
     * Phase 1 runs a local union-find over each partition of the distinct
     * edge list and replaces the partition's edges by (v, local root) for
     * every v ≠ local root — each partition becomes a star forest with
-    * the same connectivity. The star rounds below then run on the union
-    * of those forests; they do real work only where components span
-    * partitions (at one partition the first round only confirms).
+    * the same connectivity. At one partition that forest is final and
+    * goes straight to the labeling join at the end; otherwise the star
+    * rounds below run on the union of the forests, doing real work only
+    * where components span partitions.
     *
     *  - large-star(u): every STRICTLY LARGER neighbor of u re-attaches
     *    to m = min(Γ(u) ∪ {u});
@@ -310,6 +327,13 @@ object ConnectedComponents {
           lit(java.math.BigDecimal.ZERO))).head
       (r.getLong(0), r.getDecimal(1))
     }
+    // a stable star forest labels every node with its root (a root, or
+    // a node without edges, labels itself)
+    def labelFrom(forest: DataFrame): DataFrame = {
+      val star = forest.groupBy(col("src").as("id")).agg(min(col("dst")).as("_label"))
+      nodes.select(col("id")).join(star, Seq("id"), "left")
+        .select(col("id"), coalesce(col("_label"), col("id")).as("label"))
+    }
     // lazy checkpoints, same rationale as fixpoint(): the signature
     // action materializes the round's edge list and the convergence
     // scalars in one job instead of two.
@@ -325,6 +349,7 @@ object ConnectedComponents {
       }
       .toDF("src", "dst")
       .localCheckpoint(eager = false)
+    if (phaseOneSawAll(e)) return labelFrom(e)
     var sig = signature(e)
     var round = 0
     var converged = sig._1 == 0L
@@ -348,9 +373,7 @@ object ConnectedComponents {
       throw new IllegalStateException(
         s"connected components: star forest not stable within maxRounds=$maxRounds — " +
           "labels would be partial (components may still be split)")
-    val star = e.groupBy(col("src").as("id")).agg(min(col("dst")).as("_label"))
-    nodes.select(col("id")).join(star, Seq("id"), "left")
-      .select(col("id"), coalesce(col("_label"), col("id")).as("label"))
+    labelFrom(e)
   }
 
   /** General pair-edge form.

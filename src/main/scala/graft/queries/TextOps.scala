@@ -574,8 +574,9 @@ object TextOps {
   // reason column reports the strongest cause). Shape at 100 TB: the
   // union of q58's and q67's shapes — one fingerprint partial agg +
   // the membership CC (per-partition union-find, then global rounds
-  // only for clusters that span partitions); the final verdict join is
-  // on doc_id, co-partitioned with both inputs.
+  // only when the relation spans partitions — at one partition the
+  // union-find is the answer); the final verdict join is on doc_id,
+  // co-partitioned with both inputs.
   private def q126(s: SparkSession, dir: String): DataFrame =
     corpusClean(docs(s, dir))
 
@@ -593,10 +594,10 @@ object TextOps {
       .select(col("doc_id").as("id"),
         (col("band_idx").cast("long") * 32768L + col("band_val")).as("bucket"))
     // r15 (guide §2.6): the exact-fingerprint branch and the near-dup CC
-    // are independent until the verdict join — the CC's global phase is
-    // a serial driver loop that would otherwise leave the md5
-    // canonicalization waiting behind it. Two narrow columns checkpoint
-    // per side.
+    // are independent until the verdict join — the CC's global phase
+    // (when the relation spans partitions) is a serial driver loop that
+    // would otherwise leave the md5 canonicalization waiting behind it.
+    // Two narrow columns checkpoint per side.
     val Seq(exact, near) = graft.ops.Overlap.frames(Seq(
       () => fp
         .join(fp.groupBy(col("fp")).agg(min(col("doc_id")).as("canon_id")), Seq("fp"))
@@ -2874,7 +2875,7 @@ object TextOps {
   // of the bucket-partitioned relation, then min-label propagation —
   // partial-agg shuffles per round, driver sees only a convergence
   // scalar — for clusters that span partitions; at one partition that
-  // phase only confirms); cluster_id = min doc_id in the component is
+  // phase is skipped); cluster_id = min doc_id in the component is
   // the canonical representative a dedup pass would keep.
   //
   // Scale-critical shape: the propagation runs on the MEMBERSHIP
@@ -2928,7 +2929,8 @@ object TextOps {
   // of the distinct pair list contracts to a star forest by a local
   // union-find, then edge-list star rounds (O(log² n), independent of
   // graph diameter) join the forests across partitions, instead of
-  // label propagation bounded by the diameter. Shares q67's oracle
+  // label propagation bounded by the diameter; at one partition the
+  // single forest is final and no star round runs. Shares q67's oracle
   // verbatim, so the gate proves THREE formulations agree: membership
   // propagation (q67 Spark), pair-closure recursive CTE (oracle), and
   // star contraction (here). This form takes the materialized pair
@@ -2950,6 +2952,9 @@ object TextOps {
       .select(col("a.doc_id").as("src"), col("b.doc_id").as("dst"))
     val nodes = simhashed(s, dir).select(col("doc_id").as("id"))
     val labeled = graft.ops.ConnectedComponents.labelAlternating(nodes, edges)
+    // the self-join's only reader, phase 1's distinct exchange, ran
+    // inside labelAlternating: nothing reads the cache after this
+    banded.unpersist()
     val sizes = labeled.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
     labeled.join(sizes, "label")
       .select(col("id").as("doc_id"), col("label").as("cluster_id"),
@@ -4230,6 +4235,7 @@ object TextOps {
     val Seq(labeled, pairs) = graft.ops.Overlap.frames(Seq(
       () => graft.ops.ConnectedComponents.labelViaBuckets(memberships),
       () => pairJac.localCheckpoint(eager = true)))
+    sh.unpersist() // its only reader, the pair-audit checkpoint, has run
     pairs
       .join(labeled.select(col("id").as("doc_a"), col("label").as("la")), "doc_a")
       .join(labeled.select(col("id").as("doc_b"), col("label").as("lb")), "doc_b")

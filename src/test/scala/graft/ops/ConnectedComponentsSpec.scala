@@ -1,5 +1,12 @@
 package graft.ops
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
@@ -7,6 +14,53 @@ import graft.TestSpark
 class ConnectedComponentsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** Runs `body` with AQE coalescing off and 7 shuffle partitions, so
+    * every relation spans several partitions and the global phase runs.
+    */
+  private def acrossPartitions[T](body: => T): T = {
+    val confs = Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "7")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** `body`'s result and the number of jobs started while it runs. A
+    * listener records every job start between two marker jobs; the
+    * listener bus delivers events in order, so once the closing marker
+    * is seen every job `body` started has been recorded.
+    */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val starts = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def marker(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("cc-open")
+      val result = body
+      marker("cc-close")
+      eventually(timeout(30.seconds), interval(50.millis)) {
+        assert(starts.contains("cc-close"))
+      }
+      val seen = starts.asScala.toSeq
+      (result, seen.indexOf("cc-close") - seen.indexOf("cc-open") - 1)
+    } finally sc.removeSparkListener(listener)
+  }
 
   private def cc(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] =
     ConnectedComponents.label(
@@ -75,12 +129,37 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("labelViaBuckets converges on a long bucket chain (path compression)") {
-    // chain of 40 nodes linked pairwise through 39 buckets
+    // chain of 40 nodes linked pairwise through 39 buckets, spread over
+    // 7 partitions so the global rounds (not phase 1 alone) must join it
     val members = (1L to 39L).flatMap(i => Seq((i, 1000L + i), (i + 1, 1000L + i)))
       .toDF("id", "bucket")
-    val labels = ConnectedComponents.labelViaBuckets(members, maxRounds = 12)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val labels = acrossPartitions {
+      ConnectedComponents.labelViaBuckets(members, maxRounds = 12)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(labels == (1L to 40L).map(_ -> 1L).toMap)
+  }
+
+  test("one-partition relations end after phase 1: no global-phase job") {
+    // AQE coalesces these small relations to one partition, where the
+    // union-find already saw every bucket / edge. The only job inside
+    // each call is phase 1's keyed exchange (the repartition or the
+    // distinct), which the lazy checkpoint runs to plan its RDD; the
+    // seed round, the fixpoint and the convergence scalars never start.
+    val members = Seq((1L, 100L), (2L, 100L), (2L, 200L), (3L, 200L),
+      (4L, 300L), (5L, 300L), (9L, 400L)).toDF("id", "bucket")
+    val (viaBuckets, bucketJobs) = withJobCount(ConnectedComponents.labelViaBuckets(members))
+    assert(bucketJobs == 1)
+    assert(viaBuckets.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 9L -> 9L))
+
+    val nodes = Seq(1L, 2L, 3L, 4L, 5L, 9L).toDF("id")
+    val edges = Seq((2L, 1L), (3L, 2L), (4L, 5L)).toDF("src", "dst")
+    val (alternating, starJobs) =
+      withJobCount(ConnectedComponents.labelAlternating(nodes, edges))
+    assert(starJobs == 1)
+    assert(alternating.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 9L -> 9L))
   }
 
   test("maxRounds truncation throws instead of returning partial labels") {
