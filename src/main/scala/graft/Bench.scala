@@ -1,22 +1,44 @@
 package graft
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, row_number}
+import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-/** Driver-facing benchmark: runs every catalog query at
-  * `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_REPS` reps each (default 3), and
-  * reports the per-query MEDIAN — single-rep numbers on this host carry
-  * multi-x scheduling spikes (observed ~95% idle CPU during stalls) that
-  * moved between queries run to run and inflated round-1's official
-  * total 4x over steady state.
+/** The one timing harness. A run is the grid queries × conf arms ×
+  * corpus dirs:
   *
-  * The JSON line is printed to stdout AND written to `BENCH_LOCAL.json`
-  * (or `SPARK_GRAFT_BENCH_OUT`): round 1's driver record had
-  * `"parsed": null` because the line arrived through sbt's logger with
-  * an `info]` prefix — build.sbt now also sets `run / outputStrategy :=
-  * StdoutOutput` so the line reaches stdout unprefixed.
+  *   - `SPARK_GRAFT_ONLY=q1,q2` picks the queries, in that order (every
+  *     catalog entry plus the bench-only `x_` twins otherwise; only this
+  *     full-suite run times the calibration anchors);
+  *   - trailing `key=armA[,armB…]` args give the conf arms (the product
+  *     over all keys; a single value is a fixed conf);
+  *   - `SPARK_GRAFT_SF_DIR` names one or more comma-separated dirs;
+  *   - `SPARK_GRAFT_REPS` sets the reps (default 5).
+  *
+  * {{{
+  * runMain graft.Bench                                          # full suite
+  * SPARK_GRAFT_ONLY=q132_prefix_join runMain graft.Bench spark.graft.ppjoin.positional=on,off
+  * SPARK_GRAFT_ONLY=q91_clusters_altcc SPARK_GRAFT_SF_DIR=<sfA>,<sfB> runMain graft.Bench
+  * }}}
+  *
+  * A cell's key is the query name, plus `[k=v,…]` for the keys with
+  * more than one arm and `@dir` when there is more than one dir — the
+  * plain no-argument run keys cells by query name, which is what
+  * `tools/bench_diff.py` joins on. Each cell records min, median and
+  * series, and for its last rep the scheduler/executor layers (jobs,
+  * stages, tasks, executor run ms, shuffle bytes) with the per-stage
+  * table on stderr.
+  *
+  * The full record is written to `BENCH_LOCAL.json` (or
+  * `SPARK_GRAFT_BENCH_OUT`); the last stdout line is a compact summary
+  * (see the note at its print).
   */
 object Bench {
+
+  type Query = (SparkSession, String) => DataFrame
 
   /** Bench-session confs beyond [[GraftSession.sharedConfs]] — a `val`
     * so BenchConfSpec can pin the codegen-cache fix against regression
@@ -32,31 +54,259 @@ object Bench {
   val benchConfs: Seq[(String, String)] = Seq(
     "spark.sql.codegen.cache.maxEntries" -> "10000")
 
-  /** The timed bench action, shared by Bench and BenchOne so their
-    * numbers stay comparable: full-column materialization through the
-    * noop sink. NEVER count() — Catalyst prunes every computed column
-    * under `Aggregate(count(1))` (see the methodology note in main).
+  /** The timed bench action: full-column materialization through the
+    * noop sink. NEVER count() — Aggregate(count(1)) lets Catalyst prune
+    * every computed column, so a narrow query (q14's text stats, the
+    * dense-id window twin) collapses to a bare scan-count and the bench
+    * under-measures it (r07: the Project under the count was EMPTY).
     */
   def exhaust(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** Drop everything a finished query left in storage. Queries cache
+    * intermediate frames per invocation, and catalog.clearCache() drops
+    * only SQL-cache entries: GlobalIndex's sorted-pass persist and the CC
+    * fixpoint's localCheckpoints are raw RDD blocks that the
+    * ContextCleaner releases only after a JVM GC notices the frames are
+    * garbage — on a large heap that lags many queries behind, so storage
+    * ACCUMULATED across the suite and squeezed every cache-using query
+    * that followed (the r10/r11 suite-pressure variance). Nothing re-reads
+    * a finished query's RDDs, so eager unpersist is safe.
+    */
+  def cleanup(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
+  /** One grid cell: a query under one conf arm on one dir. */
+  final case class Cell(key: String, query: String, fn: Query,
+      arm: Seq[(String, String)], dir: String)
+
+  /** One completed stage, as the listener saw it. */
+  final case class StageRow(id: Int, name: String, tasks: Int,
+      submittedMs: Long, completedMs: Long, runMs: Long, inputBytes: Long,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long)
+
+  /** What the scheduler and executors did for one timed sample. */
+  final case class Layers(jobs: Int, stages: Seq[StageRow]) {
+    def tasks: Int = stages.map(_.tasks).sum
+    def runMs: Long = stages.map(_.runMs).sum
+    def shuffleReadBytes: Long = stages.map(_.shuffleReadBytes).sum
+    def shuffleWriteBytes: Long = stages.map(_.shuffleWriteBytes).sum
+  }
+
+  /** A grid run: `timeline` holds every timed sample as (rep, key,
+    * seconds) in the order it ran; `errors` the first error per cell;
+    * `layers` the last rep's record per cell.
+    */
+  final case class Result(cells: Seq[Cell],
+      timeline: Vector[(Int, String, Double)],
+      errors: collection.Map[String, String],
+      layers: Map[String, Layers]) {
+    def series(key: String): Vector[Double] =
+      timeline.collect { case (_, k, s) if k == key => s }
+    /** Errored cells are left out: a fail-fast sample would flatter the
+      * totals (round 5: 5 analysis-dead queries hid inside an rc:0 run). */
+    def ok: Seq[String] = cells.map(_.key).filterNot(errors.contains)
+    def medianSecs: Seq[(String, Double)] = ok.map(k => k -> median(series(k)))
+    def minSecs: Seq[(String, Double)] = ok.map(k => k -> series(k).min)
+  }
+
+  /** `key=a[,b…]` args → (key, arms), in argument order. */
+  def parseAxes(args: Seq[String]): Seq[(String, Seq[String])] = args.map { a =>
+    val i = a.indexOf('=')
+    require(i > 0, s"expected key=value[,value…] conf arg, got '$a'")
+    a.take(i) -> a.drop(i + 1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+  }
+
+  /** The cells, query-major: one query's arms and dirs sit next to each
+    * other in every rep round, so a host-load window hits them alike. */
+  def cells(queries: Seq[(String, Query)], axes: Seq[(String, Seq[String])],
+      dirs: Seq[String]): Seq[Cell] = {
+    val arms = axes.foldLeft(Seq(Seq.empty[(String, String)])) {
+      case (acc, (k, vs)) => for (arm <- acc; v <- vs) yield arm :+ (k -> v)
+    }
+    val varying = axes.collect { case (k, vs) if vs.size > 1 => k }.toSet
+    for ((name, fn) <- queries; arm <- arms; dir <- dirs) yield {
+      val shown = arm.filter { case (k, _) => varying(k) }
+      val key = name +
+        (if (shown.isEmpty) "" else shown.map { case (k, v) => s"$k=$v" }.mkString("[", ",", "]")) +
+        (if (dirs.size > 1) "@" + dir else "")
+      Cell(key, name, fn, arm, dir)
+    }
+  }
+
+  /** Runs the grid on `spark` and leaves the session as it found it (the
+    * arm keys' confs are restored; the session is not stopped).
+    *
+    *   1. Warm-up: every (query, arm) runs once, untimed, at `warmDir`.
+    *      Whole-stage codegen compilation (Janino) is single-threaded and
+    *      dominated each query's first execution (observed 10-100x
+    *      wall-clock inflation at ~95% idle CPU).
+    *   2. Every cell's frame is built once, untimed: queries that
+    *      materialize a fixture on first use (q201's partitioned orders,
+    *      q202's drift batches — memoized per dir) pay that write here,
+    *      not inside rep 1 (with reps <= 2 the median cannot reject it).
+    *   3. Reps INTERLEAVE round-robin over all cells (every cell's rep 1,
+    *      then every rep 2, …): this host stalls in multi-minute windows,
+    *      and consecutive reps let one window poison every sample of
+    *      whichever cell it lands on (observed: a 0.7 s query reporting a
+    *      15 s median). `beforeRound` runs at the start of each round.
+    *
+    * Each sample is recorded BEFORE [[cleanup]] (r12: the sample is the
+    * query, not the harness's bookkeeping).
+    */
+  def run(spark: SparkSession, cells: Seq[Cell], reps: Int, warmDir: String,
+      beforeRound: () => Unit = () => ()): Result = {
+    val keys = cells.flatMap(_.arm.map(_._1)).distinct
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    def setArm(arm: Seq[(String, String)]): Unit =
+      arm.foreach { case (k, v) => spark.conf.set(k, v) }
+    val listener = new LayerListener
+    spark.sparkContext.addSparkListener(listener)
+    val timeline = Vector.newBuilder[(Int, String, Double)]
+    val errors = mutable.LinkedHashMap[String, String]()
+    val layers = Map.newBuilder[String, Layers]
+    try {
+      cells.distinctBy(c => (c.query, c.arm)).foreach { c =>
+        setArm(c.arm)
+        try exhaust(c.fn(spark, warmDir)) catch { case _: Throwable => () }
+        cleanup(spark)
+      }
+      cells.foreach { c =>
+        setArm(c.arm)
+        try c.fn(spark, c.dir) catch { case _: Throwable => () }
+        cleanup(spark)
+      }
+      for (rep <- 1 to reps) {
+        beforeRound()
+        for (c <- cells) {
+          setArm(c.arm)
+          val last = rep == reps
+          if (last) listener.mark(spark)
+          val t0 = System.nanoTime()
+          try exhaust(c.fn(spark, c.dir)) catch { case e: Throwable =>
+            errors.getOrElseUpdate(c.key,
+              (e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage))
+                .replaceAll("""[^ -!#-\[\]-~]""", " ").take(160))
+          }
+          val sec = (System.nanoTime() - t0) / 1e9
+          timeline += ((rep, c.key, sec))
+          System.err.println(f"[bench] ${c.key} rep $rep: $sec%.3f s")
+          if (last) listener.mark(spark).foreach { l =>
+            layers += c.key -> l
+            printStages(c.key, l)
+          }
+          cleanup(spark)
+        }
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    Result(cells, timeline.result(), errors, layers.result())
+  }
+
+  private def printStages(key: String, l: Layers): Unit = {
+    System.err.println(s"[bench] $key layers: jobs=${l.jobs} " +
+      s"stages=${l.stages.size} tasks=${l.tasks} run=${l.runMs}ms")
+    val t00 = l.stages.map(_.submittedMs).minOption.getOrElse(0L)
+    l.stages.foreach { s =>
+      System.err.println(
+        f"[bench]   stage ${s.id}%4d @${s.submittedMs - t00}%6dms " +
+          f"span=${s.completedMs - s.submittedMs}%6dms tasks=${s.tasks}%3d " +
+          f"run=${s.runMs}%6dms in=${s.inputBytes / 1024}%7dK " +
+          f"sr=${s.shuffleReadBytes / 1024}%6dK sw=${s.shuffleWriteBytes / 1024}%6dK  " +
+          s.name.take(60))
+    }
+  }
+
+  /** Collects jobs and completed stages between MARKER jobs. The listener
+    * bus is asynchronous, so a driver-side "now collecting" flag would
+    * race it; a marker job is an event in the bus's own order instead —
+    * everything the listener saw between two markers ran between them.
+    * [[mark]] runs a marker and waits until the listener has reached it,
+    * which also drains the bus (no fixed sleep).
+    */
+  private final class LayerListener extends SparkListener {
+    private val Marker = "graft-bench-marker-"
+    private var jobs = 0
+    private val stages = mutable.ArrayBuffer[StageRow]()
+    private val markerStages = mutable.Set[Int]()
+    private val reached = new LinkedBlockingQueue[(Int, Layers)]()
+    private var sent = 0
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        .filter(_.startsWith(Marker)) match {
+        case Some(d) =>
+          markerStages ++= e.stageIds
+          reached.put(d.drop(Marker.length).toInt -> Layers(jobs, stages.toList))
+          jobs = 0
+          stages.clear()
+        case None => jobs += 1
+      }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val s = e.stageInfo
+      if (!markerStages.remove(s.stageId)) {
+        val m = s.taskMetrics
+        stages += StageRow(s.stageId, s.name.takeWhile(_ != '\n'), s.numTasks,
+          s.submissionTime.getOrElse(0L), s.completionTime.getOrElse(0L),
+          if (m == null) 0L else m.executorRunTime,
+          if (m == null) 0L else m.inputMetrics.bytesRead,
+          if (m == null) 0L else m.shuffleReadMetrics.totalBytesRead,
+          if (m == null) 0L else m.shuffleWriteMetrics.bytesWritten)
+      }
+    }
+
+    /** Runs a marker job; returns what ran since the previous marker, or
+      * None if the bus dropped the marker's event (queue overflow). */
+    def mark(spark: SparkSession): Option[Layers] = {
+      sent += 1
+      val sc = spark.sparkContext
+      val desc = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(Marker + sent)
+      try sc.parallelize(Seq(0), 1).foreach(_ => ())
+      finally sc.setJobDescription(desc)
+      Iterator.continually(reached.poll(60, TimeUnit.SECONDS))
+        .dropWhile(r => r != null && r._1 < sent).next() match {
+        case (n, l) if n == sent => Some(l)
+        case _ => None
+      }
+    }
+  }
+
+  /** Write-then-rename, so a reader never sees a half-written artifact;
+    * any failure throws. */
+  private def writeArtifact(path: String, text: String): Unit = {
+    val target = Paths.get(path).toAbsolutePath
+    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
+    try {
+      Files.writeString(tmp, text + "\n")
+      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val dirs = sfDir.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     // 5 interleaved reps: the median tolerates two host-stall hits per
-    // query (observed stall windows span minutes and hit several
-    // consecutive samples; see the round-robin note below)
+    // cell (observed stall windows span minutes and hit several
+    // consecutive samples); the min is the interference-free floor
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
-    val spark = GraftSession.localSession(cpus, benchConfs)
-    // Warm-up pass at the smallest scale factor: whole-stage codegen
-    // compilation (Janino) is single-threaded and dominated the first
-    // execution of each query (observed 10-100x wall-clock inflation at
-    // ~95% idle CPU). One tiny-SF pass compiles every query's generated
-    // code so the timed passes below measure data-plane work.
-    // SPARK_GRAFT_ONLY=q132_prefix_join,q87_ann_recall_audit — restrict
-    // to a comma-separated subset for perf iteration (full run otherwise)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val axes = parseAxes(args.toSeq)
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.localSession(cpus, benchConfs)
     // VERDICT r06 item 7: time BOTH dense-id assignment forms (SURVEY §2
     // P5) at bench scale so runScalable's 100 TB claim carries a
     // measured number, not just GoldenParitySpec's byte-equality. Bench-
@@ -65,7 +315,7 @@ object Bench {
     val idCols = Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
     def idBase(s: SparkSession, d: String): DataFrame =
       Tables.load(s, d, "lineitem").select(idCols.head, idCols.tail: _*)
-    val extraEntries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    val extraEntries: Seq[(String, Query)] = Seq(
       "x_dense_id_window" -> ((s: SparkSession, d: String) =>
         idBase(s, d).withColumn("id", row_number().over(
           // window-scale: twinned — the bench baseline being measured
@@ -74,196 +324,99 @@ object Bench {
       "x_dense_id_scalable" -> ((s: SparkSession, d: String) =>
         graft.ops.GlobalIndex.withDenseIndex(idBase(s, d), "id",
           Seq(col("l_orderkey"), col("l_linenumber")))))
-    // (q39's scaled-planes twin graduated from bench-only
-    // x_ann_multiprobe_scaled to catalog q205_ann_scaled_planes in r10 —
-    // it is timed through SparkEntry.queries like every catalog entry.)
-    val entries = (SparkEntry.queries.toSeq ++ extraEntries)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    // The timed action. NOT count(): Aggregate(count(1)) lets Catalyst
-    // prune every computed column, so a narrow query (q14's text stats,
-    // the dense-id window twin) collapses to a bare scan-count and the
-    // bench under-measures it — verified on the optimized plan (the
-    // Project under the count is EMPTY). The noop sink materializes
-    // every output column on the executors without collecting or
-    // writing — the standard full-computation benchmark action.
-    // (`exhaust` is an object member so BenchOne times the SAME action
-    // — the benchConfs lesson applied to the timed action itself.)
+    val all = SparkEntry.queries.toSeq ++ extraEntries
+    val entries = only.fold(all)(_.map { n =>
+      n -> all.toMap.getOrElse(n, sys.error(s"SPARK_GRAFT_ONLY: no query named $n"))
+    })
+    // Warm-up at the smallest scale factor: one tiny-SF pass compiles
+    // every query's generated code so the timed passes measure
+    // data-plane work.
     val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      entries.foreach { case (_, fn) =>
-        try exhaust(fn(spark, warmDir)) catch { case _: Throwable => () }
-      }
-      spark.catalog.clearCache()
-    }
-    // Build every frame once at sfDir BEFORE timing: queries that
-    // materialize a fixture on first use (q201's partitioned orders,
-    // q202's drift batches — memoized per sfDir) must pay that one-time
-    // write here, not inside rep 1's timed sample (with REPS<=2 the
-    // median cannot reject it).
-    entries.foreach { case (_, fn) =>
-      try fn(spark, sfDir) catch { case _: Throwable => () }
-    }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    // Reps are INTERLEAVED round-robin (all queries rep 1, then all
-    // rep 2, …), not consecutive per query: this host stalls in
-    // multi-minute windows (~95% idle CPU), and consecutive reps let one
-    // window poison every sample of whichever query it lands on
-    // (observed: a 0.7 s query reporting a 15 s median). With rounds
-    // minutes apart, per-query medians reject a bad window. The min is
-    // reported alongside as the interference-free steady-state floor.
-    val samples = scala.collection.mutable.Map[String, Vector[Double]]()
-      .withDefaultValue(Vector())
-    // A query that errors yields a near-zero fail-fast sample that would
-    // silently flatter the suite total (round-5 lesson: 5 analysis-dead
-    // queries hid inside an rc:0 n:190 artifact). Record the first error
-    // per query, drop errored queries from the totals, and publish the
-    // list so the artifact self-describes partial runs.
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Per-rep CALIBRATION anchor: a fixed CPU-bound job (hash-sum over
-    // a generated range — no I/O, no shuffle) timed at the start of
-    // every rep round. Recorded medians differ up to ~2× between HOST
-    // BOOTS on unchanged code (r07: the post-reboot full run inflated
-    // ~40-100% on untouched queries while optimized ones still showed
-    // their order-of-magnitude drops); the calib series makes that
-    // drift a measured number in the artifact itself, so cross-boot
-    // comparisons can normalize by the calib ratio instead of arguing
-    // from vibes. One warm-up calibration is run (and discarded) before
-    // the reps so rep 1's sample doesn't pay codegen compilation.
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
+    // Per-rep CALIBRATION anchors, timed at the start of every rep round.
+    // Recorded medians differ up to ~2× between HOST BOOTS on unchanged
+    // code (r07); the calib series makes that drift a measured number in
+    // the artifact, so cross-boot comparisons can normalize by it.
+    //  1. arith: hash-sum over a generated range (no I/O, no shuffle);
+    //  2. md5 over per-row generated strings (UTF8String allocation +
+    //     digest — the docs queries' inner loop). One anchor cannot
+    //     capture ANISOTROPIC drift: r07 ran the arith anchor 2.5× faster
+    //     while token+md5 queries ran 2-3× slower;
+    //  3. (r11) WORKLOAD-SHAPED: md5-keyed generation, a 100k-key
+    //     hash-aggregate exchange and a join back, at full parallelism.
+    //     The r10 boot pair proved 1 and 2 ANTI-correlate with the
+    //     catalog because neither exercises a shuffle. FROZEN code (never
+    //     derived from catalog queries, whose edits would move it),
+    //     synthetic, ~1-2 s; bench_diff cross-checks suite-wide shifts
+    //     against it.
+    // Full-suite runs only: in a SPARK_GRAFT_ONLY grid the anchors are most
+    // of each round's work and warm the JVM for the cells after them (nine
+    // CC consumers at sf0.1 read 20% lower minima with them than without).
+    val anchors: Seq[() => Unit] = if (only.isDefined) Nil else Seq(
       // % bounds the addends so the 100M-term sum stays far from the
       // long range (ANSI overflow would kill the anchor)
-      Bench.exhaust(spark.range(0L, 400000000L, 1L, cpus.toInt)
-        .select(org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.xxhash64(
-            org.apache.spark.sql.functions.col("id")) % 1000000L).as("h")))
-      (System.nanoTime() - t0) / 1e9
-    }
-    // SECOND anchor, workload-matched to the token/hash family: md5
-    // over per-row GENERATED STRINGS (UTF8String allocation + digest —
-    // the docs queries' inner loop), same partitioning. One anchor
-    // cannot capture ANISOTROPIC host drift: this boot (r07) ran the
-    // arithmetic anchor 2.5× FASTER while token-explode+md5 queries ran
-    // 2-3× SLOWER (SMT/topology change, not load — reproduced on an
-    // idle host). When the two anchors' cross-boot ratios disagree,
-    // normalization is ill-defined and bench_diff warns instead of
-    // producing absurd rescaled numbers; within-boot A/B (BenchOne,
-    // same harness, read the min) remains the only decision procedure.
-    def calibrate2(): Double = {
-      val t0 = System.nanoTime()
-      Bench.exhaust(spark.range(0L, 8000000L, 1L, cpus.toInt)
-        .select(org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.length(
-            org.apache.spark.sql.functions.md5(
-              org.apache.spark.sql.functions.concat(
-                org.apache.spark.sql.functions.lit("calib:"),
-                org.apache.spark.sql.functions.col("id").cast("string")))))
-          .as("h")))
-      (System.nanoTime() - t0) / 1e9
-    }
-    // THIRD anchor (r11, VERDICT r10 item 1): a WORKLOAD-SHAPED job —
-    // md5-keyed string generation, a 100k-key hash-aggregate exchange,
-    // and a join back, all at full parallelism through the same noop
-    // sink the timed queries use. The r10 boot pair proved the first
-    // two anchors ANTI-correlate with the 32-way catalog (same-HEAD
-    // boots read 115.0 vs 145.4 s raw while arith/md5 moved 0.59x/0.45x
-    // the OTHER way), because neither exercises a shuffle exchange or
-    // concurrent aggregation. This one does; it is FROZEN code (never
-    // derived from catalog queries, whose edits would silently move the
-    // anchor), synthetic (no I/O — page-cache state is a separate,
-    // smaller drift axis), and sized ~1-2 s. bench_diff's default gate
-    // is per-query median self-normalization with this anchor as the
-    // cross-check for suite-wide code shifts (see tools/bench_diff.py).
-    def calibrate3(): Double = {
-      import org.apache.spark.sql.functions._
-      val t0 = System.nanoTime()
-      val base = spark.range(0L, 3000000L, 1L, cpus.toInt)
-        .select(col("id"),
-          md5(concat(lit("anchor:"), (col("id") % 100000L).cast("string")))
-            .as("k"))
-      val agg = base.groupBy("k")
-        .agg(count(lit(1)).as("c"), sum("id").as("s"))
-      Bench.exhaust(base.join(agg, "k")
-        .select(sum(col("id") + col("c") + (col("s") % 1000L)).as("t")))
-      (System.nanoTime() - t0) / 1e9
-    }
-    calibrate(); calibrate2(); calibrate3()
-    val calibs = scala.collection.mutable.ArrayBuffer[Double]()
-    val calibs2 = scala.collection.mutable.ArrayBuffer[Double]()
-    val calibs3 = scala.collection.mutable.ArrayBuffer[Double]()
-    for (_ <- 1 to reps) {
-      calibs += calibrate()
-      calibs2 += calibrate2()
-      calibs3 += calibrate3()
-      for ((name, fn) <- entries) {
+      () => exhaust(spark.range(0L, 400000000L, 1L, cpus.toInt)
+        .select(sum(xxhash64(col("id")) % 1000000L).as("h"))),
+      () => exhaust(spark.range(0L, 8000000L, 1L, cpus.toInt)
+        .select(sum(length(md5(concat(lit("calib:"), col("id").cast("string"))))).as("h"))),
+      () => {
+        val base = spark.range(0L, 3000000L, 1L, cpus.toInt)
+          .select(col("id"),
+            md5(concat(lit("anchor:"), (col("id") % 100000L).cast("string"))).as("k"))
+        val agg = base.groupBy("k").agg(count(lit(1)).as("c"), sum("id").as("s"))
+        exhaust(base.join(agg, "k")
+          .select(sum(col("id") + col("c") + (col("s") % 1000L)).as("t")))
+      })
+    val calibs = Seq.fill(anchors.size)(mutable.ArrayBuffer[Double]())
+    anchors.foreach(_()) // discarded: rep 1 must not pay the anchors' codegen
+    val result = run(spark, cells(entries, axes, dirs), reps,
+      if (new java.io.File(warmDir).isDirectory) warmDir else dirs.head, () =>
+      anchors.zip(calibs).foreach { case (a, buf) =>
         val t0 = System.nanoTime()
-        try { exhaust(fn(spark, sfDir)) } catch { case e: Throwable =>
-          errors.getOrElseUpdate(name,
-            (e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage))
-              .replaceAll("""[^ -!#-\[\]-~]""", " ").take(160))
-        }
-        samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
-        // queries cache intermediate frames per invocation; drop them so
-        // every rep pays the same (full) cost and memory stays bounded.
-        // (r12: recorded BEFORE cleanup — the sample is the query, not
-        // the harness's bookkeeping.)
-        spark.catalog.clearCache()
-        // ... and RDD-LEVEL storage too: catalog.clearCache() drops only
-        // SQL-cache entries, but GlobalIndex's sorted-pass persist
-        // (q192/q163/q111, the x_ dense-id twins) and the CC fixpoint's
-        // localCheckpoints are raw RDD blocks that the ContextCleaner
-        // releases only after a JVM GC notices the frames are garbage —
-        // on a 128 GiB heap that can lag many queries behind, so storage
-        // blocks ACCUMULATED across the suite and squeezed every
-        // cache-using query that followed (the r10/r11 suite-pressure
-        // variance mechanism, seen from the producer side). Nothing
-        // re-reads a finished query's RDDs, so eager unpersist is safe.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
-    }
-    val ok = entries.filterNot { case (name, _) => errors.contains(name) }
-    val med = ok.map { case (name, _) => name -> median(samples(name)) }
-    val mins = ok.map { case (name, _) => name -> samples(name).min }
-    val errJson = errors
-      .map { case (k, v) => s"\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    def renderMap(m: Seq[(String, Double)]): String =
+        a()
+        buf += (System.nanoTime() - t0) / 1e9
+      })
+    val med = result.medianSecs
+    val mins = result.minSecs
+    def renderMap(m: Seq[(String, Any)]): String =
       m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def renderSeries(xs: Seq[Double]): String =
+      xs.map(x => f"$x%.4f").mkString("[", ",", "]")
+    val errJson = renderMap(result.errors.toSeq.map { case (k, v) => k -> ("\"" + v + "\"") })
+    val calibJson = calibs.zipWithIndex.map { case (c, i) =>
+      val n = if (i == 0) "calib" else s"calib${i + 1}"
+      s""""${n}_sec":${median(c.toSeq)},"${n}_series":${renderSeries(c.toSeq)},"""
+    }.mkString
+    def renderLayers(l: Layers): String =
+      s"""{"jobs":${l.jobs},"stages":${l.stages.size},"tasks":${l.tasks},""" +
+        s""""run_ms":${l.runMs},"shuffle_read_bytes":${l.shuffleReadBytes},""" +
+        s""""shuffle_write_bytes":${l.shuffleWriteBytes}}"""
+    val layerJson = renderMap(result.cells.flatMap(c =>
+      result.layers.get(c.key).map(l => c.key -> renderLayers(l))))
     val total = med.map(_._2).sum
     val totalMin = mins.map(_._2).sum
-    val calibMed = median(calibs.toSeq)
-    val calibJson = calibs.map(c => f"$c%.4f").mkString("[", ",", "]")
-    val calib2Med = median(calibs2.toSeq)
-    val calib2Json = calibs2.map(c => f"$c%.4f").mkString("[", ",", "]")
-    val calib3Med = median(calibs3.toSeq)
-    val calib3Json = calibs3.map(c => f"$c%.4f").mkString("[", ",", "]")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
-        s""""n_ok":${ok.size},"n_errored":${errors.size},"errors":$errJson,""" +
-        s""""calib_sec":$calibMed,"calib_series":$calibJson,""" +
-        s""""calib2_sec":$calib2Med,"calib2_series":$calib2Json,""" +
-        s""""calib3_sec":$calib3Med,"calib3_series":$calib3Json,""" +
+        s""""n_ok":${med.size},"n_errored":${result.errors.size},"errors":$errJson,""" +
+        calibJson +
         s""""queries":${renderMap(med)},""" +
-        s""""total_min":$totalMin,"queries_min":${renderMap(mins)},"sf":"$sfDir"}"""
+        s""""total_min":$totalMin,"queries_min":${renderMap(mins)},""" +
+        s""""queries_series":${renderMap(result.cells.map(c => c.key -> renderSeries(result.series(c.key))))},""" +
+        s""""layers":$layerJson,"sf":"$sfDir"}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    try {
-      val w = new java.io.PrintWriter(out, "UTF-8")
-      try w.println(line) finally w.close()
-    } catch { case _: Throwable => () }
+    try writeArtifact(out, line) catch { case e: Throwable =>
+      System.err.println(s"[bench] FAILED to write $out: $e")
+      spark.stop()
+      sys.exit(1)
+    }
     // The driver tail-captures stdout, and rounds 1-3 all recorded
-    // "parsed": null — the full per-query maps (86 entries × 2) overflow
-    // its capture window, truncating the line mid-key. The FINAL stdout
-    // line is therefore a compact summary (totals + the 10 slowest
-    // queries only, ~500 bytes); the complete maps live in the
-    // BENCH_LOCAL.json file written above.
+    // "parsed": null — the full per-query maps overflow its capture
+    // window, truncating the line mid-key. The FINAL stdout line is
+    // therefore a compact summary (totals + the 10 slowest cells only,
+    // ~500 bytes); the complete record lives in the artifact above.
     val top10 = med.sortBy(-_._2).take(10)
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","n":${entries.size},""" +
-        s""""n_ok":${ok.size},"n_errored":${errors.size},""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","n":${result.cells.size},""" +
+        s""""n_ok":${med.size},"n_errored":${result.errors.size},""" +
         s""""reps":$reps,"total_min":$totalMin,""" +
         s""""queries":${renderMap(top10)},"sf":"$sfDir"}"""
     println(compact)

@@ -38,8 +38,7 @@ object BucketStats {
     val (capped, dirs) = args.partition(_ == "--capped")
     require(dirs.nonEmpty,
       "usage: BucketStats [--capped] <sfDir> [<sfDir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark: SparkSession = GraftSession.localSession(cpus, Bench.benchConfs)
+    val spark: SparkSession = GraftSession.localSession(GraftSession.cpus, Bench.benchConfs)
     try dirs.foreach { dir =>
       println(statsJson(spark, dir, capped = capped.nonEmpty))
     }

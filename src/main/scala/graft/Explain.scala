@@ -8,10 +8,9 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.localSession(cpus)
+    val spark = GraftSession.localSession(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    // trailing k=v args set session confs (same convention as BenchOne),
+    // trailing k=v args set session confs (the convention Bench uses),
     // so conf-armed plan variants can be dumped for the evidence files
     val (confs, queryArgs) = args.partition(_.contains("="))
     confs.foreach { kv =>

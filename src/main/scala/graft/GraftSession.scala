@@ -15,6 +15,14 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Cores for every entry point but the CLI (whose master is a
+    * deployment setting): `SPARK_GRAFT_CPUS`, else every core of this
+    * machine. Read once, so an Explain dump plans with the shuffle width
+    * Bench times.
+    */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   /** Session confs every graft session carries. */
   val sharedConfs: Seq[(String, String)] = Seq(
     "spark.sql.session.timeZone" -> "UTC",

@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
 object JobFloor {
   def main(args: Array[String]): Unit = {
     val iters = if (args.nonEmpty) args(0).toInt else 30
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.localSession(cpus, Bench.benchConfs)
+    val spark = GraftSession.localSession(GraftSession.cpus, Bench.benchConfs)
     import spark.implicits._
 
     def job0() = Bench.exhaust(
@@ -32,12 +31,16 @@ object JobFloor {
         .groupBy(($"k" % 7L).as("g")).agg(sum($"c").as("s"))
         .orderBy($"g"))
     }
+    // the median action, not the mean: one host stall inside the loop
+    // would otherwise move the floor
     def time(name: String, f: () => Unit): Unit = {
       (1 to 5).foreach(_ => f()) // warm-up: codegen + page cache
-      val t0 = System.nanoTime()
-      (1 to iters).foreach(_ => f())
-      val ms = (System.nanoTime() - t0) / 1e6 / iters
-      System.err.println(f"[job-floor] $name: $ms%.1f ms/action")
+      val ms = (1 to iters).map { _ =>
+        val t0 = System.nanoTime()
+        f()
+        (System.nanoTime() - t0) / 1e6
+      }
+      System.err.println(f"[job-floor] $name: ${Bench.median(ms)}%.1f ms/action")
     }
     time("0-exchange 1-task", () => job0())
     time("1-exchange agg   ", () => job1x())

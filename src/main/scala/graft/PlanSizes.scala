@@ -15,16 +15,13 @@ object PlanSizes {
   def main(args: Array[String]): Unit = {
     val minKb = if (args.nonEmpty) args(0).toInt else 20
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.localSession(cpus, Bench.benchConfs)
+    val spark = GraftSession.localSession(GraftSession.cpus, Bench.benchConfs)
     val out = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try {
         val qe = fn(spark, sfDir).queryExecution
         val a = qe.analyzed.toString.length
         val o = qe.optimizedPlan.toString.length
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        Bench.cleanup(spark)
         if (o >= minKb * 1024 || a >= 4 * minKb * 1024) Some((name, a, o)) else None
       } catch { case e: Throwable =>
         System.err.println(s"[plan-sizes] $name failed: ${e.getMessage}"); None

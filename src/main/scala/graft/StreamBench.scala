@@ -60,7 +60,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = GraftSession.cpus
     val chunks = sys.env.getOrElse("SPARK_GRAFT_STREAM_CHUNKS", "10").toInt
     val spark = GraftSession.localSession(cpus)
     import org.apache.spark.sql.functions.col

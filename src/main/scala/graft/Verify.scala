@@ -9,10 +9,9 @@ object Verify {
     // optional trailing args: restrict to these query names (local
     // iteration; the driver always runs the full two-arg form)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // share the bench session's codegen-cache sizing: 200+ queries × ~10
     // generated classes each sit right at the old 2000-entry cap
-    val spark = GraftSession.localSession(cpus, Bench.benchConfs)
+    val spark = GraftSession.localSession(GraftSession.cpus, Bench.benchConfs)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
@@ -22,16 +21,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries cache intermediate frames (q71/q78 shingle scans, ANN
-      // signatures); drop them so one query's cache doesn't pin
-      // executor memory across the remaining ~85
-      spark.catalog.clearCache()
-      // raw RDD persists too (GlobalIndex's sorted pass, CC fixpoint
-      // localCheckpoints) — clearCache misses them and the
-      // ContextCleaner only sweeps after a JVM GC, so they'd otherwise
-      // accumulate across the 206-query session (same hygiene as Bench)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // one query's cached frames and RDD persists must not pin
+      // executor memory across the rest of the session
+      Bench.cleanup(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1067,7 +1067,7 @@ object TextOps {
       // Cache lifetime: the result is lazy, so there is no sound place
       // to unpersist inside the builder — like every per-query cache
       // in this file, cleanup is the harness's catalog.clearCache()
-      // between queries (Bench/Verify/BenchOne/BenchAB); tests that
+      // between queries (Bench.cleanup, in Bench and Verify); tests that
       // run both arms in one session must clearCache() between them.
       val ranked = rankedDfTokens(sh).join(nsh, Seq("doc_id")).cache()
       val prefixA = ranked

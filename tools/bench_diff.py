@@ -48,11 +48,12 @@ more than --drift-fraction (default 0.25) of shared queries move beyond
 the threshold in either direction — several times any code round in
 this repo's history (rounds 5-10 each moved <5% of the suite) — it
 prints a BOOT-DRIFT-DOMINATED verdict and exits 0 (pass --strict to
-keep exit 1), directing the caller to same-boot A/B (BenchOne stash/pop,
-per-rep min) or a baseline re-promotion on the current boot. Note the
-verdict cannot distinguish a SUITE-WIDE code/conf regression from boot
-drift (both move the anchor and the suite together) — that is
-inherently a same-boot question; the drift verdict says so.
+keep exit 1), directing the caller to same-boot A/B (graft.Bench on
+the suspect queries, git stash/pop, per-rep min) or a baseline
+re-promotion on the current boot. Note the verdict cannot distinguish
+a SUITE-WIDE code/conf regression from boot drift (both move the
+anchor and the suite together) — that is inherently a same-boot
+question; the drift verdict says so.
 
 --anchor-normalize restores the legacy calib-anchor rescale;
 --no-normalize (alias --no-calib-normalize) compares raw wall-clock.
@@ -158,7 +159,7 @@ def main():
                   "— a suite-WIDE shift is code-attributable (or the "
                   "anchor broke). Self-normalization will hide it; "
                   "re-read the raw totals below and A/B within one boot "
-                  "(BenchOne) before trusting this diff.")
+                  "(graft.Bench) before trusting this diff.")
         else:
             print(f"workload anchor agrees with the suite median "
                   f"({anchor_ratio:.2f}x vs {med_ratio:.2f}x) — the "
@@ -228,9 +229,10 @@ def main():
               "within the workload (r10 pair: ~0.95x for scan/relational "
               "queries, 1.5-3.5x for string-hash/shuffle queries, same "
               "code), so no rescale can recenter it. Action: judge any "
-              "specific suspicion with same-boot A/B (BenchOne, stash/"
-              "pop, per-rep min), or re-run the baseline on THIS boot "
-              "and re-promote. A suite-WIDE code/conf regression is "
+              "specific suspicion with same-boot A/B (graft.Bench on "
+              "the suspect queries, stash/pop, per-rep min), or re-run "
+              "the baseline on THIS boot and re-promote. A suite-WIDE "
+              "code/conf regression is "
               "indistinguishable from boot drift here — also a same-boot "
               "question.")
         sys.exit(1 if (ns.strict and regressed) else 0)
