@@ -20,7 +20,7 @@ import scala.collection.mutable
   *
   * {{{
   * runMain graft.Bench                                          # full suite
-  * SPARK_GRAFT_ONLY=q132_prefix_join runMain graft.Bench spark.graft.ppjoin.positional=on,off
+  * SPARK_GRAFT_ONLY=q132_prefix_join runMain graft.Bench spark.sql.adaptive.coalescePartitions.enabled=true,false
   * SPARK_GRAFT_ONLY=q91_clusters_altcc SPARK_GRAFT_SF_DIR=<sfA>,<sfB> runMain graft.Bench
   * }}}
   *
@@ -30,7 +30,8 @@ import scala.collection.mutable
   * `tools/bench_diff.py` joins on. Each cell records min, median and
   * series, and for its last rep the scheduler/executor layers (jobs,
   * stages, tasks, executor run ms, shuffle bytes) with the per-stage
-  * table on stderr.
+  * table on stderr. Every rep runs under the cell's key as its job
+  * description, and the table names each stage by it.
   *
   * The full record is written to `BENCH_LOCAL.json` (or
   * `SPARK_GRAFT_BENCH_OUT`); the last stdout line is a compact summary
@@ -88,7 +89,9 @@ object Bench {
   final case class Cell(key: String, query: String, fn: Query,
       arm: Seq[(String, String)], dir: String)
 
-  /** One completed stage, as the listener saw it. */
+  /** One completed stage, as the listener saw it; `name` is the job
+    * description of the job that ran it (the cell key), or the stage's
+    * call site when its job had none. */
   final case class StageRow(id: Int, name: String, tasks: Int,
       submittedMs: Long, completedMs: Long, runMs: Long, inputBytes: Long,
       shuffleReadBytes: Long, shuffleWriteBytes: Long)
@@ -166,6 +169,8 @@ object Bench {
       beforeRound: () => Unit = () => ()): Result = {
     val keys = cells.flatMap(_.arm.map(_._1)).distinct
     val saved = keys.map(k => k -> spark.conf.getOption(k))
+    val sc = spark.sparkContext
+    val savedDesc = sc.getLocalProperty("spark.job.description")
     def setArm(arm: Seq[(String, String)]): Unit =
       arm.foreach { case (k, v) => spark.conf.set(k, v) }
     val listener = new LayerListener
@@ -190,6 +195,7 @@ object Bench {
           setArm(c.arm)
           val last = rep == reps
           if (last) listener.mark(spark)
+          sc.setJobDescription(c.key)
           val t0 = System.nanoTime()
           try exhaust(c.fn(spark, c.dir)) catch { case e: Throwable =>
             errors.getOrElseUpdate(c.key,
@@ -197,6 +203,7 @@ object Bench {
                 .replaceAll("""[^ -!#-\[\]-~]""", " ").take(160))
           }
           val sec = (System.nanoTime() - t0) / 1e9
+          sc.setJobDescription(savedDesc)
           timeline += ((rep, c.key, sec))
           System.err.println(f"[bench] ${c.key} rep $rep: $sec%.3f s")
           if (last) listener.mark(spark).foreach { l =>
@@ -239,25 +246,29 @@ object Bench {
     private var jobs = 0
     private val stages = mutable.ArrayBuffer[StageRow]()
     private val markerStages = mutable.Set[Int]()
+    private val stageJobDesc = mutable.Map[Int, String]()
     private val reached = new LinkedBlockingQueue[(Int, Layers)]()
     private var sent = 0
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-        .filter(_.startsWith(Marker)) match {
-        case Some(d) =>
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))) match {
+        case Some(d) if d.startsWith(Marker) =>
           markerStages ++= e.stageIds
           reached.put(d.drop(Marker.length).toInt -> Layers(jobs, stages.toList))
           jobs = 0
           stages.clear()
-        case None => jobs += 1
+          stageJobDesc.clear()
+        case desc =>
+          desc.foreach(d => e.stageIds.foreach(stageJobDesc(_) = d))
+          jobs += 1
       }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val s = e.stageInfo
       if (!markerStages.remove(s.stageId)) {
         val m = s.taskMetrics
-        stages += StageRow(s.stageId, s.name.takeWhile(_ != '\n'), s.numTasks,
+        stages += StageRow(s.stageId,
+          stageJobDesc.getOrElse(s.stageId, s.name.takeWhile(_ != '\n')), s.numTasks,
           s.submissionTime.getOrElse(0L), s.completionTime.getOrElse(0L),
           if (m == null) 0L else m.executorRunTime,
           if (m == null) 0L else m.inputMetrics.bytesRead,

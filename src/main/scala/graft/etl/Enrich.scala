@@ -272,33 +272,6 @@ object Enrich {
       .start()
   }
 
-  /** Join-based enrichment variant — the reference's literal structure
-    * (J1/J2 in SURVEY.md §2.5): compute a results table keyed by id_news,
-    * then reattach it with a left equi-join (`pd.merge`, `Main.py:254`).
-    * Kept as an operator demo; `run` is the preferred fused form. The
-    * enrichment side is broadcast — it carries three small strings per
-    * key, so the wide clean rows never shuffle.
-    */
-  def runJoinBased(spark: SparkSession, clean: DataFrame, cfg: Config = Config()): DataFrame = {
-    import spark.implicits._
-    val client = cfg.client
-    val delay = cfg.perCallDelayMs
-    val results = clean.select(col("id_news"), col("title"), col("content"))
-      .as[(Long, String, String)]
-      .mapPartitions { rows =>
-        // same [[callSafely]] guard as the fused path: rate delay, Try →
-        // error tuple, AND field-wise `N/A` defaulting (`Main.py:114-119`)
-        // — both enrichment variants share L5 parity
-        rows.map { case (id, title, content) =>
-          val (sent, cat, sum) = callSafely(client, delay, title, content)
-          (id, sent, cat, sum)
-        }
-      }
-      .toDF("id_news", "sentiment_llm", "category_llm", "market_impact_summary")
-    clean.join(broadcast(results), Seq("id_news"), "left")
-      .withColumn("etl_processing_time", current_timestamp())
-  }
-
   /** Stage-2 sink, same timestamped-directory semantics as Stage 1
     * (`Main.py:261-266`).
     */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build several independent DataFrames CONCURRENTLY on driver threads
   * (guide §2.6 — overlap independent jobs). Spark's scheduler happily
@@ -21,14 +21,33 @@ import org.apache.spark.sql.DataFrame
   * three distributedNtile pipelines occupied ~1.7 s of strictly serial
   * wall at sf0.1) so the CC-consumer and audit-family queries share one
   * definition.
+  *
+  * Each branch's jobs carry their own job tag. When a branch fails,
+  * the siblings' jobs are cancelled by tag until every branch has
+  * ended, and then the first error is rethrown, so no job outlives the
+  * call.
   */
 object Overlap {
   def frames(parts: Seq[() => DataFrame]): Seq[DataFrame] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
+    val sc = SparkSession.active.sparkContext
+    val tags = parts.indices.map(i => s"graft-overlap-${java.util.UUID.randomUUID()}-$i")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(parts.size)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(Future.sequence(parts.map(p => Future(p()))), Duration.Inf)
-    finally pool.shutdown()
+    val branches = parts.zip(tags).map { case (p, tag) =>
+      Future { sc.addJobTag(tag); try p() finally sc.removeJobTag(tag) }
+    }
+    // Future.sequence fails as soon as any branch fails
+    try Await.result(Future.sequence(branches), Duration.Inf)
+    catch { case e: Throwable =>
+      // a sibling between two jobs submits its next one after a cancel,
+      // so cancel again until it has ended too
+      while (!branches.forall(_.isCompleted)) {
+        tags.foreach(sc.cancelJobsWithTag(_, "a sibling Overlap branch failed"))
+        Thread.sleep(50)
+      }
+      throw e
+    } finally pool.shutdown()
   }
 }

@@ -92,25 +92,17 @@ object Relational {
       |JOIN region ON n_regionkey = r_regionkey
       |GROUP BY r_name, n_name""".stripMargin
 
-  // q4 — window ranking: top-3 orders per customer. Shuffles once on the
-  // partition key; deterministic tie-break on o_orderkey. With
-  // spark.graft.topk.native=true the same contract runs through the
-  // custom physical operator instead (one streaming group-scan, O(1)
-  // state — graft.plans.TopKPerGroupExec); TopKSpec pins the two forms
-  // row-identical.
+  // q4 — window ranking: top-3 orders per customer, with the
+  // row_number() <= 3 contract run through the custom physical operator
+  // (a map-side partial prune, one shuffle on the customer key, then one
+  // streaming group-scan — graft.plans.TopKPerGroupExec); deterministic
+  // tie-break on o_orderkey. TopKSpec pins it row-identical to the
+  // window + filter form.
   private def q4(s: SparkSession, dir: String): DataFrame = {
     val base = load(s, dir, "orders")
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-    if (s.conf.getOption("spark.graft.topk.native").exists(_.toBoolean))
-      graft.ops.TopK.perGroup(base, Seq("o_custkey"),
-        Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3, "rn")
-    else {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      base
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 3)
-    }
+    graft.ops.TopK.perGroup(base, Seq("o_custkey"),
+      Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3, "rn")
   }
   private val q4Sql =
     """SELECT * FROM (

@@ -144,7 +144,7 @@ object TextOps {
     * interpreted lambda per shingle and dominated the MinHash query
     * (~3 s of its ~4.6 s at sf0.1).
     */
-  private def shingled(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def shingled(s: SparkSession, dir: String): DataFrame = {
     docs(s, dir)
       .select(col("doc_id"), words(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
@@ -186,17 +186,7 @@ object TextOps {
   // at max df ≈ 200 q57 is 1.5× faster, at df ≈ 400 2.4× faster and
   // still flat while q16 grows superlinearly. The cap is the 100 TB
   // plan; q16 is the small-clean-corpus special case.
-  private def q57(s: SparkSession, dir: String): DataFrame =
-    q57Impl(s, dir, materialize = false)
-
-  /** A/B seam: `materialize` caches the branch-point pair table instead
-    * of recomputing the post-shuffle aggregate per reader (see bench
-    * notes in ARCHITECTURE §6c). Public only for the bench harness.
-    */
-  def q57Variant(s: SparkSession, dir: String, materialize: Boolean): DataFrame =
-    q57Impl(s, dir, materialize)
-
-  private def q57Impl(s: SparkSession, dir: String, materialize: Boolean): DataFrame = {
+  private def q57(s: SparkSession, dir: String): DataFrame = {
     // ObjectHashAggregate (which executes typed Aggregators) falls back
     // to sort-based aggregation after 128 distinct keys per partition —
     // a full sort of the exploded shingle frame. The hash map is the
@@ -225,7 +215,7 @@ object TextOps {
     // explicit cache. least/greatest canonicalizes each pair instead of
     // sorting lists (an interpreted object-array sort at the
     // ObjectHashAggregate boundary).
-    val pairsRaw = ex0.groupBy(col("shingle"))
+    val pairsAll = ex0.groupBy(col("shingle"))
       .agg(bounded(col("doc_id")).as("ds"))
       .filter(col("ds").isNotNull)
       .select(posexplode(col("ds")).as(Seq("i", "x")), col("ds"))
@@ -233,7 +223,6 @@ object TextOps {
       .groupBy(least(col("x"), col("y")).as("doc_a"),
         greatest(col("x"), col("y")).as("doc_b"))
       .agg(count(lit(1)).as("common"))
-    val pairsAll = if (materialize) pairsRaw.cache() else pairsRaw
     val nsh = pairsAll.filter(col("doc_a") === col("doc_b"))
       .select(col("doc_a").as("doc_id"), col("common").as("n_sh"))
     pairsAll.filter(col("doc_a") < col("doc_b"))
@@ -409,22 +398,6 @@ object TextOps {
         graft.functions.SimHash60Expr.column(words(col("text"))).as("simhash"))
       .where(col("simhash").isNotNull)
 
-  /** The superseded explode→groupBy(60 SUMs) formulation, kept ONLY as
-    * the parity twin SimHashSpec checks the fused expression against
-    * (same role as q17's gated chain for minhash_sigs).
-    */
-  private[graft] def simhashOfExploded(d: DataFrame): DataFrame = {
-    val tok = d.select(col("doc_id"), explode(words(col("text"))).as("token"))
-      .withColumn("h", h60(col("token")))
-    val votes = (0 to 59).map { b =>
-      sum(when(expr(s"(shiftright(h, $b) & 1)") === 1, 1L).otherwise(-1L))
-        .as(s"v$b")
-    }
-    tok.groupBy(col("doc_id")).agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"),
-        (0 to 59).map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(0L))
-          .reduce(_ + _).as("simhash"))
-  }
   private def q18(s: SparkSession, dir: String): DataFrame = simhashed(s, dir)
   private val simhashSql =
     s"""tok AS (
@@ -721,27 +694,6 @@ object TextOps {
       |SELECT doc_id, bm25_scaled, n_terms FROM lex
       |ORDER BY bm25_scaled DESC, doc_id LIMIT 20""".stripMargin
 
-  /** PPJoin positional-filter switch for the exact-join family
-    * (q132/q136). `on` prunes each prefix-collision row whose colliding
-    * ranks make the overlap threshold unreachable; `off` is the r11
-    * prefix-only shape, kept as the A/B arm. The DEFAULT is per-query,
-    * decided by same-boot interleaved A/B plus an old-vs-new BenchOne
-    * pair (tools/bench_ab_r12_ppjoin.txt, ARCHITECTURE §8.9): q132
-    * defaults ON (its symmetric threshold binds both prefix sides:
-    * −50%/−52% mins at sf1/sf3-organic, −29% in-suite at sf0.1);
-    * q136 defaults OFF (its filter needs ranks on the INDEX side,
-    * whose window+cache materialization costs ~2× at sf0.1 — old-shape
-    * min 3.75 s vs 7.21 s same boot — while buying only −14% mins on
-    * the saturated sf3 corpus; `on` is the documented arm for corpora
-    * dense enough that the collision stream dominates the index pass).
-    * PpJoinPositionalSpec pins on == off row sets and both defaults. */
-  private def ppjoinPositionalOn(s: SparkSession, default: String): Boolean = {
-    val v = s.conf.get("spark.graft.ppjoin.positional", default)
-    require(Set("on", "off").contains(v),
-      s"spark.graft.ppjoin.positional must be on|off, got '$v'")
-    v == "on"
-  }
-
   /** Rarity-ranked df≥2 token stream shared by the exact-join family:
     * one row per (doc, df≥2 shingle) with `r` = the shingle's 1-based
     * rank in the doc under the GLOBAL (df asc, shingle asc) order and
@@ -777,9 +729,8 @@ object TextOps {
   // tokens are each doc's rarest → candidate fan-out per token is
   // tiny by construction (a high-df token never lands in a prefix
   // unless the doc is short); the verification join touches only
-  // candidates. PPJoin positional filter: default ON here (symmetric
-  // threshold binds both prefix sides; −50%/−52% organic mins, §8.9)
-  // — q136 defaults OFF; switch: spark.graft.ppjoin.positional.
+  // candidates, and the PPJoin positional filter below prunes the
+  // collision rows that cannot reach the threshold.
   private def q132(s: SparkSession, dir: String): DataFrame = {
     val sh = shingled(s, dir).cache()
     val nsh = sh.select(col("doc_id"), size(col("shingles")).cast("long").as("n_sh"))
@@ -804,10 +755,8 @@ object TextOps {
     // even the bound can't reach the threshold is LOSSLESS per row.
     // Integer-exact: bound ≥ ⌈x/3⌉ ⟺ 3·bound ≥ x.
     val positional =
-      if (ppjoinPositionalOn(s, default = "on"))
-        (least(col("a.m") - col("a.r"), col("b.m") - col("b.r")) + 1) * 3 >=
-          col("a.n_sh") + col("b.n_sh")
-      else lit(true)
+      (least(col("a.m") - col("a.r"), col("b.m") - col("b.r")) + 1) * 3 >=
+        col("a.n_sh") + col("b.n_sh")
     // PPJoin length filter, exact for t = 1/2: jaccard >= 1/2 and
     // common <= min imply 2*min(|a|,|b|) >= max(|a|,|b|)
     // r15: the dedup exchange doubles as the verification stage's width.
@@ -1041,14 +990,12 @@ object TextOps {
   // construction), like q132. Shape at 100 TB: probe side carries only
   // prefix tokens (rare by construction → tiny fan-out), index side is
   // the full exploded corpus partitioned by shingle — the standard
-  // asymmetric similarity-join layout. PPJoin positional filter:
-  // default OFF here (unlike q132's ON — the index-side rank window
-  // costs ~2× at sf0.1 for −14% at saturation, §8.9); switch:
-  // spark.graft.ppjoin.positional.
+  // asymmetric similarity-join layout, with the PPJoin positional
+  // filter on the collision rows as in q132.
   private def q136(s: SparkSession, dir: String): DataFrame = {
     val sh = shingled(s, dir).cache()
     val nsh = sh.select(col("doc_id"), size(col("shingles")).cast("long").as("n_sh"))
-    // POSITIONAL arm (conf on; losslessness argument at q132):
+    // POSITIONAL filter (losslessness argument at q132):
     // containment ≥ 0.8 needs overlap ≥ ⌈4·n_a/5⌉, a collision at
     // ranks (r_a, r_b) bounds overlap by 1 + min(m_a−r_a, m_b−r_b),
     // and a qualifying pair's first common token is inside a's prefix
@@ -1058,63 +1005,33 @@ object TextOps {
     // containment case where no static index prefix exists (a tiny
     // doc can be contained in a huge one, forcing the index to keep
     // every token). Integer-exact: bound ≥ ⌈4·n_a/5⌉ ⟺ 5·bound ≥ 4·n_a.
-    // The arm's PRICE is structural, which is why the arms are two
-    // lineages and off is the default: the index side must carry
-    // ranks, i.e. the whole df≥2 stream flows through the per-doc
-    // window and a cache materializes it — ~2× q136's sf0.1 wall for
-    // a −14% min at the saturated sf3 corpus (ARCHITECTURE §8.9).
-    val cand = if (ppjoinPositionalOn(s, default = "off")) {
-      // Cache lifetime: the result is lazy, so there is no sound place
-      // to unpersist inside the builder — like every per-query cache
-      // in this file, cleanup is the harness's catalog.clearCache()
-      // between queries (Bench.cleanup, in Bench and Verify); tests that
-      // run both arms in one session must clearCache() between them.
-      val ranked = rankedDfTokens(sh).join(nsh, Seq("doc_id")).cache()
-      val prefixA = ranked
-        .filter(col("r") <= expr("n_sh div 5 + 1"))
-        .select(col("doc_id").as("doc_a"), col("shingle"),
-          col("n_sh").as("pn_a"), col("r").as("r_a"), col("m").as("m_a"))
-      val indexB = ranked
-        .select(col("doc_id").as("doc_b"), col("shingle"),
-          col("n_sh").as("pn_b"), col("r").as("r_b"), col("m").as("m_b"))
-      prefixA.join(indexB, Seq("shingle"))
-        .filter(col("doc_a") =!= col("doc_b") &&
-          col("pn_b") * 5 >= col("pn_a") * 4 &&
-          (least(col("m_a") - col("r_a"), col("m_b") - col("r_b")) + 1) * 5 >=
-            col("pn_a") * 4)
-        .select(col("doc_a"), col("doc_b"))
-        // r15: explicit-width dedup exchange = verify-stage width (the
-        // q132 AQE-coalescing fix; rationale there)
-        .repartition(s.sessionState.conf.numShufflePartitions,
-          col("doc_a"), col("doc_b"))
-        .distinct()
-    } else {
-      // default arm — the r11 shape: the exploded token stream is read
-      // three times (df count, prefix ranking, index side) — cache it
-      // once; the index side never touches a window
-      val ex = sh.select(col("doc_id"), explode(col("shingles")).as("shingle")).cache()
-      val dfreq = ex.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      val prefixA = ex.join(dfreq, Seq("shingle"))
-        // df = 1 means only one doc carries the shingle — it cannot
-        // produce a cross-doc collision on either side of the join
-        .filter(col("df") >= 2)
-        .withColumn("r", row_number().over(
-          Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shingle"))).cast("long"))
-        .join(nsh, Seq("doc_id"))
-        .filter(col("r") <= expr("n_sh div 5 + 1"))
-        .select(col("doc_id").as("doc_a"), col("shingle"), col("n_sh").as("pn_a"))
-      val indexB = ex.join(dfreq.filter(col("df") >= 2), Seq("shingle"))
-        .join(nsh, Seq("doc_id"))
-        .select(col("doc_id").as("doc_b"), col("shingle"), col("n_sh").as("pn_b"))
-      prefixA.join(indexB, Seq("shingle"))
-        .filter(col("doc_a") =!= col("doc_b") && col("pn_b") * 5 >= col("pn_a") * 4)
-        .select(col("doc_a"), col("doc_b"))
-        // r15: explicit-width dedup exchange = verify-stage width (the
-        // q132 AQE-coalescing fix; rationale there)
-        .repartition(s.sessionState.conf.numShufflePartitions,
-          col("doc_a"), col("doc_b"))
-        .distinct()
-    }
+    // Its price is structural: the index side must carry ranks, so the
+    // whole df≥2 stream flows through the per-doc window and one cache
+    // holds it for both sides.
+    //
+    // Cache lifetime: the result is lazy, so there is no sound place to
+    // unpersist inside the builder — like every per-query cache in this
+    // file, cleanup is the harness's catalog.clearCache() between
+    // queries (Bench.cleanup, in Bench and Verify).
+    val ranked = rankedDfTokens(sh).join(nsh, Seq("doc_id")).cache()
+    val prefixA = ranked
+      .filter(col("r") <= expr("n_sh div 5 + 1"))
+      .select(col("doc_id").as("doc_a"), col("shingle"),
+        col("n_sh").as("pn_a"), col("r").as("r_a"), col("m").as("m_a"))
+    val indexB = ranked
+      .select(col("doc_id").as("doc_b"), col("shingle"),
+        col("n_sh").as("pn_b"), col("r").as("r_b"), col("m").as("m_b"))
+    val cand = prefixA.join(indexB, Seq("shingle"))
+      .filter(col("doc_a") =!= col("doc_b") &&
+        col("pn_b") * 5 >= col("pn_a") * 4 &&
+        (least(col("m_a") - col("r_a"), col("m_b") - col("r_b")) + 1) * 5 >=
+          col("pn_a") * 4)
+      .select(col("doc_a"), col("doc_b"))
+      // r15: explicit-width dedup exchange = verify-stage width (the
+      // q132 AQE-coalescing fix; rationale there)
+      .repartition(s.sessionState.conf.numShufflePartitions,
+        col("doc_a"), col("doc_b"))
+      .distinct()
     cand
       .join(sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), Seq("doc_a"))
       .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b")), Seq("doc_b"))

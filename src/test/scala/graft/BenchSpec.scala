@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The grid harness ([[Bench.run]]) on the shared session: cell keys,
   * per-cell sample counts, round-robin interleaving, conf restore, the
-  * last rep's layer record, and error exclusion from the totals.
+  * last rep's layer record with stages named by cell, and error
+  * exclusion from the totals.
   */
 class BenchSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
@@ -31,6 +32,8 @@ class BenchSpec extends AnyFunSuite {
     keys.foreach { k =>
       val l = r.layers(k)
       assert(l.jobs >= 1 && l.stages.size >= 1, s"$k: $l")
+      // the per-stage table names each stage by its cell's key
+      assert(l.stages.forall(_.name == k), s"$k: ${l.stages.map(_.name)}")
     }
   }
 

@@ -320,6 +320,31 @@ class QueryCatalogSpec extends AnyFunSuite {
     }
   }
 
+  /** Every ordered pair of distinct sf0.001 documents as
+    * (doc_a, doc_b, common, n_a, n_b), by brute force over the shingle
+    * arrays (distinct per doc): the reference for the exact joins q132
+    * and q136, whose prefix, length and positional filters are each
+    * claimed lossless. */
+  private lazy val shinglePairs: Seq[(Long, Long, Long, Long, Long)] = {
+    val docs = graft.queries.TextOps.shingled(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getSeq[String](1).toSet)).toSeq
+    for ((a, sa) <- docs; (b, sb) <- docs if a != b)
+      yield (a, b, sa.count(sb).toLong, sa.size.toLong, sb.size.toLong)
+  }
+
+  private def sortedRows(name: String): Seq[Seq[Any]] =
+    try SparkEntry.queries(name)(spark, dir).collect().map(_.toSeq).toSeq
+      .sortBy(_.mkString("|"))
+    finally spark.catalog.clearCache() // both queries cache the shingle frame
+
+  test("q132 equals the brute-force Jaccard >= 1/2 pair set") {
+    val expected = shinglePairs.collect {
+      case (a, b, c, na, nb) if a < b && c * 3 >= na + nb => Seq(a, b, c, na, nb)
+    }.sortBy(_.mkString("|"))
+    assert(expected.nonEmpty, "no qualifying pair at sf0.001: vacuous")
+    assert(sortedRows("q132_prefix_join") == expected)
+  }
+
   test("q135 fused ranks and scores are consistent with the rank lists") {
     val rows = SparkEntry.queries("q135_rrf_fusion")(spark, dir).collect()
     assert(rows.length == 20)
@@ -359,6 +384,14 @@ class QueryCatalogSpec extends AnyFunSuite {
       // an identical-shingle-set pair must also appear mirrored
       if (c == na && c == nb) assert(pairs.contains((b, a)))
     }
+  }
+
+  test("q136 equals the brute-force containment >= 4/5 pair set") {
+    val expected = shinglePairs.collect {
+      case (a, b, c, na, nb) if c * 5 >= na * 4 => Seq(a, b, c, na, nb, c * 1000 / na)
+    }.sortBy(_.mkString("|"))
+    assert(expected.nonEmpty, "no qualifying pair at sf0.001: vacuous")
+    assert(sortedRows("q136_containment_join") == expected)
   }
 
   test("q137 KMV estimator branch is exercised and within its error bound") {

@@ -2,6 +2,8 @@ package graft.etl
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{broadcast, col, current_timestamp}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.schema.Schemas
@@ -16,6 +18,24 @@ class EnrichSpec extends AnyFunSuite {
       (2L, "Tech layoffs", "Cuts deepen", "http://a/2", Timestamp.valueOf("2022-01-02 00:00:00"), "TECH"),
       (3L, "Rates rise", "Fed hikes", "http://a/3", Timestamp.valueOf("2022-01-03 00:00:00"), "MONEY"))
       .toDF("id_news", "title", "content", "link", "publish_date", "category")
+  }
+
+  /** The reference's literal enrichment structure (J1/J2 in SURVEY.md
+    * §2.5), the check on the fused `Enrich.run`: a results table keyed
+    * by id_news, reattached with a left equi-join (`pd.merge`,
+    * `Main.py:254`), through the same `callSafely` guard. */
+  private def runJoinBased(clean: DataFrame, cfg: Enrich.Config): DataFrame = {
+    import spark.implicits._
+    val (client, delay) = (cfg.client, cfg.perCallDelayMs)
+    val results = clean.select(col("id_news"), col("title"), col("content"))
+      .as[(Long, String, String)]
+      .mapPartitions(_.map { case (id, title, content) =>
+        val (sent, cat, sum) = Enrich.callSafely(client, delay, title, content)
+        (id, sent, cat, sum)
+      })
+      .toDF("id_news", "sentiment_llm", "category_llm", "market_impact_summary")
+    clean.join(broadcast(results), Seq("id_news"), "left")
+      .withColumn("etl_processing_time", current_timestamp())
   }
 
   test("disabled client reproduces the reference's DISABLE_LLM tuple") {
@@ -62,8 +82,7 @@ class EnrichSpec extends AnyFunSuite {
     val fused = Enrich.run(spark, cleanDf(),
       Enrich.Config(client = HashingStubClient))
       .select(cols.head, cols.tail: _*).collect().map(_.toSeq).toSet
-    val joined = Enrich.runJoinBased(spark, cleanDf(),
-      Enrich.Config(client = HashingStubClient))
+    val joined = runJoinBased(cleanDf(), Enrich.Config(client = HashingStubClient))
       .select(cols.head, cols.tail: _*).collect().map(_.toSeq).toSet
     assert(fused == joined && fused.size == 3)
   }
@@ -78,7 +97,7 @@ class EnrichSpec extends AnyFunSuite {
     }
     for (df <- Seq(
         Enrich.run(spark, cleanDf(), Enrich.Config(client = NullFieldClient)),
-        Enrich.runJoinBased(spark, cleanDf(), Enrich.Config(client = NullFieldClient)))) {
+        runJoinBased(cleanDf(), Enrich.Config(client = NullFieldClient)))) {
       val rows = df.collect()
       assert(rows.length == 3)
       assert(rows.forall(_.getAs[String]("sentiment_llm") == LlmClient.notAvailable))

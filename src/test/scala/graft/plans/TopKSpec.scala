@@ -1,39 +1,49 @@
 package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
 /** The custom top-k-per-group physical operator: row-identical to the
-  * window + filter form, actually planned through `TopKPerGroupExec`,
-  * correct on ties, short groups, and the global (no-group) case.
+  * window + filter form, actually planned through `TopKPerGroupExec`
+  * over the map-side partial prune, correct on ties, short groups, the
+  * global (no-group) case and the prune's byte-budget overflow.
   */
 class TopKSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
+  private def sorted(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+
+  /** The window + filter form of `TopK.perGroup`: the reference. */
+  private def windowTopK(df: DataFrame, group: String, order: Seq[org.apache.spark.sql.Column],
+      k: Int, rank: String): DataFrame =
+    df.withColumn(rank, row_number().over(
+      Window.partitionBy(col(group)).orderBy(order: _*)).cast("long"))
+      .filter(col(rank) <= k)
+
   test("q4 via the native operator is row-identical to the window form") {
-    def rows(native: Boolean) = {
-      if (native) spark.conf.set("spark.graft.topk.native", "true")
-      else spark.conf.unset("spark.graft.topk.native")
-      try graft.SparkEntry.queries("q4_order_rank_per_customer")(spark, dir)
-        .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-      finally spark.conf.unset("spark.graft.topk.native")
-    }
-    val window = rows(native = false)
-    val native = rows(native = true)
+    val orders = graft.Tables.load(spark, dir, "orders")
+      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
+    val window = sorted(windowTopK(orders, "o_custkey",
+      Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3, "rn"))
+    val native = sorted(graft.SparkEntry.queries("q4_order_rank_per_customer")(spark, dir))
     assert(native.nonEmpty && native == window)
   }
 
-  test("the plan actually contains TopKPerGroupExec under the flag") {
-    spark.conf.set("spark.graft.topk.native", "true")
-    try {
-      val df = graft.SparkEntry.queries("q4_order_rank_per_customer")(spark, dir)
-      df.collect()
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("TopKPerGroup"), s"custom operator not planned:\n$p")
-      assert(!p.contains("Window"), s"window survived alongside the operator:\n$p")
-    } finally spark.conf.unset("spark.graft.topk.native")
+  test("q4 plans the partial prune under TopKPerGroupExec, no window") {
+    val df = graft.SparkEntry.queries("q4_order_rank_per_customer")(spark, dir)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    // plan strings drop the "Exec" suffix of node names
+    assert(p.contains("TopKPerGroup ["), s"custom operator not planned:\n$p")
+    assert(p.contains("TopKPerGroupPartial ["), s"partial prune not planned:\n$p")
+    assert(!p.contains("Window"), s"window survived alongside the operator:\n$p")
   }
 
   test("ties, short groups, and rank values") {
@@ -52,40 +62,45 @@ class TopKSpec extends AnyFunSuite {
       ("c", 6L, 2L), ("c", 7L, 1L)))
   }
 
-  test("map-side partial prune: planned by default, off under the conf") {
+  test("both operators report their metrics in explain(\"formatted\")") {
     import spark.implicits._
     val df = (1L to 100L).map(i => (i % 7, i)).toDF("g", "id").repartition(4)
-    def planOf(partial: Boolean) = {
-      spark.conf.set("spark.graft.topk.partial", partial.toString)
-      try {
-        val out = graft.ops.TopK.perGroup(df, Seq("g"), Seq(col("id").desc), 2, "r")
-        out.collect()
-        out.queryExecution.executedPlan.toString
-      } finally spark.conf.unset("spark.graft.topk.partial")
+    val out = graft.ops.TopK.perGroup(df, Seq("g"), Seq(col("id").desc), 2, "r")
+    assert(out.collect().length == 14)
+    val text = out.queryExecution.explainString(FormattedMode)
+    Seq("rows in: 100", "rows out: 14", "groups: 7", "groups tracked:",
+      "over-budget pass-through rows: 0", "peak bytes held:").foreach { m =>
+      assert(text.contains(m), s"'$m' missing from:\n$text")
     }
-    assert(planOf(true).contains("TopKPerGroupPartial"))
-    assert(!planOf(false).contains("TopKPerGroupPartial"))
   }
 
-  test("partial prune parity, including the maxGroups overflow pass-through") {
+  test("byte-budget overflow passes through and stays exact") {
     import spark.implicits._
     // 40 groups across 4 partitions; ordering total (tie-broken by id)
     val df = (1L to 400L).map(i => (i % 40, i % 13, i)).toDF("g", "v", "id")
       .repartition(4)
-    def rows(confs: (String, String)*) = {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try graft.ops.TopK.perGroup(df, Seq("g"), Seq(col("v").desc, col("id").asc), 3, "r")
-        .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-      finally confs.foreach { case (k, _) => spark.conf.unset(k) }
-    }
-    val off = rows("spark.graft.topk.partial" -> "false")
-    val on = rows("spark.graft.topk.partial" -> "true")
-    // cap of 1 tracked group per partition: most rows take the overflow
-    // pass-through path and must still produce the identical result
-    val overflow = rows(
-      "spark.graft.topk.partial" -> "true",
-      "spark.graft.topk.partial.maxGroups" -> "1")
-    assert(off.nonEmpty && on == off && overflow == off)
+    val order = Seq(col("v").desc, col("id").asc)
+    val reference = sorted(windowTopK(df, "g", order, 3, "r"))
+    assert(reference.nonEmpty &&
+      sorted(graft.ops.TopK.perGroup(df, Seq("g"), order, 3, "r")) == reference)
+
+    // The partial prune over the planned input with a 64-byte budget:
+    // one group key and a row or two fit, so most rows pass through.
+    SparkSession.setActiveSession(spark)
+    val child = df.queryExecution.executedPlan
+    def attr(n: String) = child.output.find(_.name == n).get
+    val partial = TopKPerGroupPartialExec(Seq(attr("g")),
+      Seq(SortOrder(attr("v"), Descending), SortOrder(attr("id"), Ascending)),
+      3, 64L, child)
+    val survivors = partial.executeCollect()
+      .map(r => Row(r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val m = partial.metrics.map { case (k, v) => k -> v.value }
+    assert(m("passThrough") > 0, m)
+    assert(m("rowsIn") == 400 && m("numOutputRows") == survivors.size, m)
+    assert(m("peakBytes") > 0 && m("peakBytes") <= 4 * 64, m)
+    val pruned = spark.createDataFrame(
+      java.util.Arrays.asList(survivors: _*), df.schema)
+    assert(sorted(windowTopK(pruned, "g", order, 3, "r")) == reference)
   }
 
   test("empty group list = global top-k with ranks") {
