@@ -29,6 +29,9 @@ object Explain {
       println(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
       println(df.queryExecution.executedPlan.toString)
+      // as Bench and Verify do: a query's plan must not read storage a
+      // query dumped before it left behind
+      Bench.cleanup(spark)
     }
     spark.stop()
   }

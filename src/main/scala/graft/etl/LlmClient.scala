@@ -94,7 +94,7 @@ final class HttpLlmClient(
           val raw = t.complete(model, LlmClient.promptFor(title, content), 0.0)
           // strict parse: a non-object response is a failure, exactly as
           // the reference's dict.get on a non-dict raises → error tuple
-          val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(raw)
+          val node = HttpLlmClient.json.readTree(raw)
           if (node == null || !node.isObject) throw new IllegalArgumentException("not a JSON object")
           def field(k: String): String =
             if (node.hasNonNull(k)) node.get(k).asText() else LlmClient.notAvailable
@@ -104,6 +104,14 @@ final class HttpLlmClient(
             LlmResult("ERROR_API", "ERROR_API", "Error generating summary.")
         }
     }
+}
+
+object HttpLlmClient {
+  /** One mapper per JVM: building one costs more than the parse it
+    * serves, and `readTree` on a shared, unconfigured mapper is
+    * thread-safe.
+    */
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
 }
 
 /** Deterministic offline model: derives plausible enrichment from content

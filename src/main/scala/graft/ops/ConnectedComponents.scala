@@ -24,17 +24,20 @@ import org.apache.spark.sql.functions._
   *     local component is connected in the input, and two local
   *     components that share a root share that node. Per-partition state
   *     is O(rows in the partition), which AQE's advisory partition bytes
-  *     bound — never O(graph).
+  *     bound — never O(graph). Every node enters phase 1 (its own
+  *     buckets; in the edge form an (n, n) self-loop), so its output
+  *     lists every node.
   *  2. GLOBAL FIXPOINT — the distributed rounds on the contracted
   *     relation, run only when it spans more than one partition. When
   *     AQE coalesces the relation to one partition (every input below
   *     the advisory partition size, which covers every benchmark-scale
-  *     input) phase 1's union-find saw every bucket / edge, so its local
-  *     roots ARE the component minima and the operator returns them
-  *     without starting a phase-2 job. Across many partitions each
-  *     local component collapses to one hop, so no distance in the
-  *     contracted graph exceeds its distance in the input and phase 2
-  *     needs at most the rounds the single-phase fixpoint needed.
+  *     input) phase 1's union-find saw every bucket / edge, so its
+  *     (node, local root) rows ARE the answer and the operator returns
+  *     them as they are: no phase-2 job, no aggregate, no node join.
+  *     Across many partitions each local component collapses to one
+  *     hop, so no distance in the contracted graph exceeds its distance
+  *     in the input and phase 2 needs at most the rounds the
+  *     single-phase fixpoint needed.
   *
   * Scale shape of a phase-2 round: partial-aggregatable `min(label)`
   * shuffles (map-side combine shrinks them before the exchange) plus
@@ -272,13 +275,17 @@ object ConnectedComponents {
     * compression) pays O(log diameter) rounds that each shuffle the
     * full edge list.
     *
-    * Phase 1 runs a local union-find over each partition of the distinct
-    * edge list and replaces the partition's edges by (v, local root) for
-    * every v ≠ local root — each partition becomes a star forest with
-    * the same connectivity. At one partition that forest is final and
-    * goes straight to the labeling join at the end; otherwise the star
-    * rounds below run on the union of the forests, doing real work only
-    * where components span partitions.
+    * Phase 1 adds an (n, n) self-loop for every row of `nodes` to the
+    * edge list, takes one distinct exchange over both, and runs a local
+    * union-find over each partition, which emits (v, local root) for
+    * every vertex it saw. At one partition that relation already is the
+    * answer, one row per distinct vertex labeled by its component min,
+    * and is returned as (id, label) with no further job. Otherwise its
+    * v ≠ root rows are a star forest per partition with the same
+    * connectivity, and the star rounds below run on their union, doing
+    * real work only where components span partitions; the final
+    * labeling takes its vertex set from the phase-1 output, so `nodes`
+    * is read exactly once and may repeat ids.
     *
     *  - large-star(u): every STRICTLY LARGER neighbor of u re-attaches
     *    to m = min(Γ(u) ∪ {u});
@@ -292,6 +299,10 @@ object ConnectedComponents {
     * detected by an order-independent (count, Σ xxhash64(src,dst))
     * signature of the canonical edge set — two scalars to the driver,
     * never rows.
+    *
+    * Precondition: every edge endpoint is a node. The output holds one
+    * row per distinct vertex of `nodes` ∪ edge endpoints, so an endpoint
+    * missing from `nodes` would appear in it.
     *
     * Same contract as [[label]]: returns (id, label), label = min id
     * of the component.
@@ -327,29 +338,27 @@ object ConnectedComponents {
           lit(java.math.BigDecimal.ZERO))).head
       (r.getLong(0), r.getDecimal(1))
     }
-    // a stable star forest labels every node with its root (a root, or
-    // a node without edges, labels itself)
-    def labelFrom(forest: DataFrame): DataFrame = {
-      val star = forest.groupBy(col("src").as("id")).agg(min(col("dst")).as("_label"))
-      nodes.select(col("id")).join(star, Seq("id"), "left")
-        .select(col("id"), coalesce(col("_label"), col("id")).as("label"))
-    }
     // lazy checkpoints, same rationale as fixpoint(): the signature
     // action materializes the round's edge list and the convergence
     // scalars in one job instead of two.
     val sp = edges.sparkSession
     import sp.implicits._
-    var e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct()
+    // the self-loops put every node into the union-find, so its output
+    // covers isolated nodes too and no node join is needed afterwards
+    val roots = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .union(nodes.select(col("id").cast("long"), col("id").cast("long")))
+      .distinct()
       .as[(Long, Long)]
       .mapPartitions { es =>
         val uf = new UnionFind
         es.foreach { case (a, b) => uf.union(a, b) }
-        uf.labels.filter { case (v, root) => v != root }
+        uf.labels
       }
-      .toDF("src", "dst")
+      .toDF("id", "label")
       .localCheckpoint(eager = false)
-    if (phaseOneSawAll(e)) return labelFrom(e)
+    if (phaseOneSawAll(roots)) return roots
+    var e = roots.filter(col("id") =!= col("label"))
+      .select(col("id").as("src"), col("label").as("dst"))
     var sig = signature(e)
     var round = 0
     var converged = sig._1 == 0L
@@ -373,7 +382,11 @@ object ConnectedComponents {
       throw new IllegalStateException(
         s"connected components: star forest not stable within maxRounds=$maxRounds — " +
           "labels would be partial (components may still be split)")
-    labelFrom(e)
+    // a stable star forest labels every vertex with its root (a root, or
+    // a vertex without edges, labels itself)
+    val star = e.groupBy(col("src").as("id")).agg(min(col("dst")).as("_label"))
+    roots.select(col("id")).distinct().join(star, Seq("id"), "left")
+      .select(col("id"), coalesce(col("_label"), col("id")).as("label"))
   }
 
   /** General pair-edge form.

@@ -2806,6 +2806,9 @@ object TextOps {
   // near-dup cluster at 100 TB; the membership form never creates it.
   // (The DuckDB oracle DOES use the pair-closure formulation — the
   // equivalence of the two is part of what the gate checks.)
+  // cluster_size is a count window over the label: one exchange on the
+  // label, where an aggregate joined back cost an aggregate exchange
+  // plus a broadcast; q161, which never reads it, prunes it away.
   private def q67(s: SparkSession, dir: String): DataFrame = {
     val memberships = simhashed(s, dir)
       .select(col("doc_id"), posexplode(array((0 to 3).map(i =>
@@ -2813,12 +2816,14 @@ object TextOps {
         .as(Seq("band_idx", "band_val")))
       .select(col("doc_id").as("id"),
         (col("band_idx").cast("long") * 32768L + col("band_val")).as("bucket"))
-    val labeled = graft.ops.ConnectedComponents.labelViaBuckets(memberships)
-    val sizes = labeled.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
-    labeled.join(sizes, "label")
-      .select(col("id").as("doc_id"), col("label").as("cluster_id"),
-        col("cluster_size"))
+    withClusterSize(graft.ops.ConnectedComponents.labelViaBuckets(memberships))
   }
+  /** (id, label) → (doc_id, cluster_id, cluster_size), the output of
+    * q67 and q91.
+    */
+  private def withClusterSize(labeled: DataFrame): DataFrame =
+    labeled.select(col("id").as("doc_id"), col("label").as("cluster_id"),
+      count(lit(1)).over(Window.partitionBy(col("label"))).as("cluster_size"))
   // Oracle: the same fixpoint via a recursive CTE — DuckDB's recursive
   // UNION dedups against all prior rows, so label propagation
   // terminates; MIN over every label that ever reached a node = the
@@ -2847,7 +2852,10 @@ object TextOps {
   // union-find, then edge-list star rounds (O(log² n), independent of
   // graph diameter) join the forests across partitions, instead of
   // label propagation bounded by the diameter; at one partition the
-  // single forest is final and no star round runs. Shares q67's oracle
+  // union-find's (doc, root) rows are the labels and no star round
+  // runs. The SimHash bands are computed once: the cached band frame
+  // feeds both sides of the candidate self-join and, as its doc_ids,
+  // the node list. Shares q67's oracle
   // verbatim, so the gate proves THREE formulations agree: membership
   // propagation (q67 Spark), pair-closure recursive CTE (oracle), and
   // star contraction (here). This form takes the materialized pair
@@ -2862,20 +2870,19 @@ object TextOps {
         .as(Seq("band_idx", "band_val")))
       .select(col("doc_id"),
         (col("band_idx").cast("long") * 32768L + col("band_val")).as("bucket"))
-      .cache() // both sides of the candidate self-join
+      .cache() // both sides of the candidate self-join, and the nodes
     val edges = banded.as("a")
       .join(banded.as("b"), col("a.bucket") === col("b.bucket")
         && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("src"), col("b.doc_id").as("dst"))
-    val nodes = simhashed(s, dir).select(col("doc_id").as("id"))
+    // every doc has four band rows; phase 1's distinct exchange takes
+    // the repeats
+    val nodes = banded.select(col("doc_id").as("id"))
     val labeled = graft.ops.ConnectedComponents.labelAlternating(nodes, edges)
-    // the self-join's only reader, phase 1's distinct exchange, ran
-    // inside labelAlternating: nothing reads the cache after this
+    // the cache's only reader, phase 1's distinct exchange, ran inside
+    // labelAlternating: nothing reads the cache after this
     banded.unpersist()
-    val sizes = labeled.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
-    labeled.join(sizes, "label")
-      .select(col("id").as("doc_id"), col("label").as("cluster_id"),
-        col("cluster_size"))
+    withClusterSize(labeled)
   }
 
   // q68 — TF-IDF top-k terms per document, the classic relevance /

@@ -10,26 +10,11 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.TestSpark.acrossPartitions
 
 class ConnectedComponentsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  /** Runs `body` with AQE coalescing off and 7 shuffle partitions, so
-    * every relation spans several partitions and the global phase runs.
-    */
-  private def acrossPartitions[T](body: => T): T = {
-    val confs = Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "7")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   /** `body`'s result and the number of jobs started while it runs. A
     * listener records every job start between two marker jobs; the

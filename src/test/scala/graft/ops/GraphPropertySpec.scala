@@ -3,6 +3,7 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.TestSpark.acrossPartitions
 
 /** Property checks for the graph/layout operators against in-memory
   * reference implementations: both ConnectedComponents forms must match
@@ -100,22 +101,31 @@ class GraphPropertySpec extends AnyFunSuite {
   }
 
   test("labelAlternating: isolated nodes and empty edge sets label themselves") {
-    val got = ConnectedComponents.labelAlternating(
-      (1L to 5L).toDF("id"),
-      Seq.empty[(Long, Long)].toDF("src", "dst"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (1L to 5L).map(n => n -> n).toMap)
+    // phase 1's union-find output is the node set: isolated nodes must
+    // appear, nodes listed several times once, and an empty edge set
+    // leaves every node its own label — whether that output is returned
+    // directly (one partition) or feeds the star rounds (7 partitions)
+    val cases = Seq(
+      "isolated nodes" -> ((1L to 8L), Seq((2L, 1L), (3L, 2L), (5L, 6L))),
+      "nodes listed several times" ->
+        (Seq(7L, 1L, 3L, 1L, 3L, 3L, 4L, 7L, 2L), Seq((1L, 2L), (3L, 4L), (4L, 3L))),
+      "empty edge set" -> (Seq(4L, 2L, 9L, 2L), Seq.empty[(Long, Long)]))
+    for (across <- Seq(false, true); (name, (nodes, edges)) <- cases) {
+      def labels = ConnectedComponents.labelAlternating(
+          nodes.toDF("id"), edges.toDF("src", "dst"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      val got = if (across) acrossPartitions(labels) else labels
+      val width = if (across) "7 partitions" else "one partition"
+      assert(got.map(_._1).sorted == nodes.distinct.sorted, s"$name, $width: $got")
+      assert(got.toMap == unionFind(nodes.distinct, edges), s"$name, $width")
+    }
   }
 
   test("two-phase forms match union-find when the relation spans many partitions") {
     // AQE coalesces every small test relation to one partition, where
     // phase 1 alone is the answer; pin 7 uncoalesced partitions so the
     // global phase has to join local components across partitions
-    val confs = Seq("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "7")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    acrossPartitions {
       val rng = new scala.util.Random(2024)
       val graphs = Seq(300, 1000).map { n =>
         s"random n=$n" -> ((1L to n.toLong),
@@ -136,9 +146,6 @@ class GraphPropertySpec extends AnyFunSuite {
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(viaBuckets == expected, s"labelViaBuckets, $name")
       }
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -50,7 +50,7 @@ def main():
             "cores": os.cpu_count(),
             "mem_gib": mem_gib,
             "kernel": os.uname().release,
-            "spark": "local[32], Spark 4.1.2, Java 17",
+            "spark": f"local[{os.cpu_count()}], Spark 4.1.2, Java 17",
         },
         "gate": (
             "python3 tools/bench_diff.py BASELINE_BENCH.json "
