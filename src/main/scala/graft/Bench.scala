@@ -412,7 +412,7 @@ object Bench {
         s""""queries":${renderMap(med)},""" +
         s""""total_min":$totalMin,"queries_min":${renderMap(mins)},""" +
         s""""queries_series":${renderMap(result.cells.map(c => c.key -> renderSeries(result.series(c.key))))},""" +
-        s""""layers":$layerJson,"sf":"$sfDir"}"""
+        s""""layers":$layerJson,"cpus":"$cpus","sf":"$sfDir"}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     try writeArtifact(out, line) catch { case e: Throwable =>
       System.err.println(s"[bench] FAILED to write $out: $e")

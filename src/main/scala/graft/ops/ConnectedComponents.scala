@@ -280,7 +280,8 @@ object ConnectedComponents {
     * union-find over each partition, which emits (v, local root) for
     * every vertex it saw. At one partition that relation already is the
     * answer, one row per distinct vertex labeled by its component min,
-    * and is returned as (id, label) with no further job. Otherwise its
+    * and is returned as (id, label) with no further job, planned as a
+    * single partition (`coalesce(1)`). Otherwise its
     * v ≠ root rows are a star forest per partition with the same
     * connectivity, and the star rounds below run on their union, doing
     * real work only where components span partitions; the final
@@ -356,7 +357,10 @@ object ConnectedComponents {
       }
       .toDF("id", "label")
       .localCheckpoint(eager = false)
-    if (phaseOneSawAll(roots)) return roots
+    // coalesce(1) of the one-partition relation moves no row; it plans
+    // the output as a single partition, so a consumer keyed on the
+    // label (q91's cluster sizes) needs no exchange
+    if (phaseOneSawAll(roots)) return roots.coalesce(1)
     var e = roots.filter(col("id") =!= col("label"))
       .select(col("id").as("src"), col("label").as("dst"))
     var sig = signature(e)

@@ -175,12 +175,6 @@ final case class TopKPerGroupExec(
   * dropped only while its group's heap holds k better rows, and a heap
   * row leaves only for a better one, so every dropped row still has k
   * better rows in the output.
-  *
-  * A task whose groups barely repeat cannot prune, so it gives up: after
-  * its first `GiveUpAfterRows` rows, if it tracks more than
-  * `GiveUpGroupsPerRow` groups per row, it emits what it retained, frees
-  * the heaps and passes the rest of its rows through, which is exact
-  * for the same reason. The "gave up (tasks)" metric counts such tasks.
   */
 final case class TopKPerGroupPartialExec(
     groupExprs: Seq[Expression],
@@ -200,7 +194,6 @@ final case class TopKPerGroupPartialExec(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "rows out"),
     "groups" -> SQLMetrics.createMetric(sparkContext, "groups tracked"),
     "passThrough" -> SQLMetrics.createMetric(sparkContext, "over-budget pass-through rows"),
-    "gaveUp" -> SQLMetrics.createMetric(sparkContext, "gave up (tasks)"),
     // summed over tasks, like Spark's own "peak memory"
     "peakBytes" -> SQLMetrics.createSizeMetric(sparkContext, "peak bytes held"))
 
@@ -215,10 +208,7 @@ final case class TopKPerGroupPartialExec(
     val rowsOut = longMetric("numOutputRows")
     val groups = longMetric("groups")
     val passThrough = longMetric("passThrough")
-    val gaveUp = longMetric("gaveUp")
     val peakBytes = longMetric("peakBytes")
-    val giveUpAfter = TopKPerGroupStrategy.GiveUpAfterRows
-    val giveUpGroups = (TopKPerGroupStrategy.GiveUpGroupsPerRow * giveUpAfter).toLong
     child.execute().mapPartitions({ it =>
       val keyProj = UnsafeProjection.create(groupList, childOutput)
       // child rows are almost always UnsafeRows already
@@ -234,12 +224,7 @@ final case class TopKPerGroupPartialExec(
       // per group: the k best rows seen, as a max-heap on `ord` so the
       // currently-worst kept row is O(1) to inspect and replace
       val heaps = new java.util.HashMap[UnsafeRow, java.util.PriorityQueue[UnsafeRow]]()
-      // the pruning pass ends at the input's end or where the task gives
-      // up; a given-up task's remaining rows follow its flushed heaps
-      var seen = 0L
-      var givenUp = false
-      def prunable: Boolean = !givenUp && it.hasNext
-      val pruned = new Iterator[InternalRow] {
+      new Iterator[InternalRow] {
         private var held = 0L
         private var peak = 0L
         private var flush: java.util.Iterator[java.util.PriorityQueue[UnsafeRow]] = null
@@ -248,10 +233,9 @@ final case class TopKPerGroupPartialExec(
 
         private def advance(): Unit = {
           nextRow = null
-          while (nextRow == null && prunable) {
+          while (nextRow == null && it.hasNext) {
             val row = it.next()
             rowsIn += 1
-            seen += 1
             val key = keyProj(row)
             val heap = heaps.get(key)
             val full = heap != null && heap.size >= limit
@@ -281,12 +265,8 @@ final case class TopKPerGroupPartialExec(
                 }
               }
             } // else: provably outside this partition's top-k — drop
-            if (seen == giveUpAfter && heaps.size > giveUpGroups) {
-              givenUp = true
-              gaveUp += 1
-            }
           }
-          if (nextRow == null) { // pruning ended: flush the heaps
+          if (nextRow == null) { // input drained: flush the heaps
             if (flush == null) {
               flush = heaps.values().iterator()
               peakBytes += peak
@@ -296,7 +276,6 @@ final case class TopKPerGroupPartialExec(
               if (flushHeap == null || !flushHeap.hasNext) flushHeap = flush.next().iterator()
               if (flushHeap.hasNext) nextRow = flushHeap.next()
             }
-            if (nextRow == null) heaps.clear()
           }
           if (nextRow != null) rowsOut += 1
         }
@@ -309,9 +288,6 @@ final case class TopKPerGroupPartialExec(
           r
         }
       }
-      // pulled lazily, one row per next(), so no copy is needed
-      val rest = it.map { row => rowsIn += 1; rowsOut += 1; row }
-      pruned ++ rest
     }, preservesPartitioning = true)
   }
 
@@ -335,20 +311,6 @@ object TopKPerGroupStrategy extends SparkStrategy {
     * inside that share.
     */
   val PartialBudgetBytes: Long = 16L << 20
-
-  /** The give-up rule: a task that still tracks more than
-    * `GiveUpGroupsPerRow` groups per row after its first
-    * `GiveUpAfterRows` rows stops pruning (all-distinct keys prune
-    * nothing and cost a copy and a map entry per row). The window must
-    * be long enough that groups which do repeat have repeated: after
-    * 1,024 rows the rule also fired on q68 (5,000 docs of ~23 tf rows
-    * each, arriving in hash order: 116,231 rows passed where the prune
-    * keeps at most 5 per doc) and on q39, and both read 18–24% slower at
-    * sf0.1. At 8,192 rows a task gives up only with more than ~7,400
-    * groups in view.
-    */
-  val GiveUpAfterRows: Long = 8192L
-  val GiveUpGroupsPerRow: Double = 0.9
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case t: TopKPerGroup =>

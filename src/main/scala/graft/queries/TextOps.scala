@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables.load
@@ -2806,9 +2807,6 @@ object TextOps {
   // near-dup cluster at 100 TB; the membership form never creates it.
   // (The DuckDB oracle DOES use the pair-closure formulation — the
   // equivalence of the two is part of what the gate checks.)
-  // cluster_size is a count window over the label: one exchange on the
-  // label, where an aggregate joined back cost an aggregate exchange
-  // plus a broadcast; q161, which never reads it, prunes it away.
   private def q67(s: SparkSession, dir: String): DataFrame = {
     val memberships = simhashed(s, dir)
       .select(col("doc_id"), posexplode(array((0 to 3).map(i =>
@@ -2819,11 +2817,23 @@ object TextOps {
     withClusterSize(graft.ops.ConnectedComponents.labelViaBuckets(memberships))
   }
   /** (id, label) → (doc_id, cluster_id, cluster_size), the output of
-    * q67 and q91.
+    * q67 and q91. Labels planned as one partition (labelAlternating's
+    * one-partition exit) count their clusters with a window in that
+    * partition, which needs no exchange. Otherwise the sizes are an
+    * aggregate joined back: the aggregate combines map-side and its join
+    * is a broadcast or, when skewed, split by AQE, where a window would
+    * send every row of a viral cluster to one task.
     */
-  private def withClusterSize(labeled: DataFrame): DataFrame =
-    labeled.select(col("id").as("doc_id"), col("label").as("cluster_id"),
-      count(lit(1)).over(Window.partitionBy(col("label"))).as("cluster_size"))
+  private def withClusterSize(labeled: DataFrame): DataFrame = {
+    val ids = Seq(col("id").as("doc_id"), col("label").as("cluster_id"))
+    if (labeled.queryExecution.executedPlan.outputPartitioning == SinglePartition) {
+      labeled.select(ids :+
+        count(lit(1)).over(Window.partitionBy(col("label"))).as("cluster_size"): _*)
+    } else {
+      val sizes = labeled.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
+      labeled.join(sizes, "label").select(ids :+ col("cluster_size"): _*)
+    }
+  }
   // Oracle: the same fixpoint via a recursive CTE — DuckDB's recursive
   // UNION dedups against all prior rows, so label propagation
   // terminates; MIN over every label that ever reached a node = the

@@ -88,6 +88,16 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  test("q91: cluster sizes count inside one-partition labels, join back across partitions") {
+    val one = executedPlan("q91_clusters_altcc")
+    assert(one.contains("Window [count(1)") && !one.contains("hashpartitioning(label"),
+      s"one-partition labels did not count in place:\n$one")
+    // phase 2 ran: no window, which would put a whole cluster in one task
+    val many = TestSpark.acrossPartitions(executedPlan("q91_clusters_altcc"))
+    assert(!many.contains("Window") && many.contains("partial_count"),
+      s"labels across partitions did not aggregate and join back:\n$many")
+  }
+
   test("q48: six-table join uses hash joins only; orderdate filter pushed") {
     val p = executedPlan("q48_local_supplier_revenue")
     assert(!p.contains("NestedLoop") && !p.contains("Cartesian"),

@@ -11,8 +11,7 @@ import graft.TestSpark
 /** The custom top-k-per-group physical operator: row-identical to the
   * window + filter form, actually planned through `TopKPerGroupExec`
   * over the map-side partial prune, correct on ties, short groups, the
-  * global (no-group) case, the prune's byte-budget overflow and its
-  * give-up on groups that do not repeat.
+  * global (no-group) case and the prune's byte-budget overflow.
   */
 class TopKSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -70,7 +69,7 @@ class TopKSpec extends AnyFunSuite {
     assert(out.collect().length == 14)
     val text = out.queryExecution.explainString(FormattedMode)
     Seq("rows in: 100", "rows out: 14", "groups: 7", "groups tracked:",
-      "over-budget pass-through rows: 0", "gave up (tasks): 0", "peak bytes held:").foreach { m =>
+      "over-budget pass-through rows: 0", "peak bytes held:").foreach { m =>
       assert(text.contains(m), s"'$m' missing from:\n$text")
     }
   }
@@ -102,20 +101,6 @@ class TopKSpec extends AnyFunSuite {
     val pruned = spark.createDataFrame(
       java.util.Arrays.asList(survivors: _*), df.schema)
     assert(sorted(windowTopK(pruned, "g", order, 3, "r")) == reference)
-  }
-
-  test("a task whose groups do not repeat gives up pruning and stays exact") {
-    import spark.implicits._
-    // one row per group: after its first 8,192 rows each of the three
-    // tasks tracks a group per row, so it emits what it retained and
-    // passes the rest of its 10,000 rows through
-    val df = (1L to 30000L).map(i => (i, i % 17, i)).toDF("g", "v", "id").repartition(3)
-    val order = Seq(col("v").desc, col("id").asc)
-    val out = graft.ops.TopK.perGroup(df, Seq("g"), order, 2, "r")
-    assert(sorted(out) == sorted(windowTopK(df, "g", order, 2, "r")))
-    val text = out.queryExecution.explainString(FormattedMode)
-    val gaveUp = "gave up \\(tasks\\): (\\d+)".r.findFirstMatchIn(text).map(_.group(1).toLong)
-    assert(gaveUp.exists(_ > 0), text)
   }
 
   test("empty group list = global top-k with ranks") {

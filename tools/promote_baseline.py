@@ -34,6 +34,9 @@ def main():
         if line.startswith("MemTotal"):
             mem_gib = int(line.split()[1]) // (1024 * 1024)
             break
+    # the run's parallelism: recorded by Bench (GraftSession.cpus), else
+    # the same SPARK_GRAFT_CPUS-then-core-count rule Bench applies
+    cpus = run.get("cpus") or os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     run["baseline"] = {
         "promoted_from": note,
         "methodology": (
@@ -50,7 +53,7 @@ def main():
             "cores": os.cpu_count(),
             "mem_gib": mem_gib,
             "kernel": os.uname().release,
-            "spark": f"local[{os.cpu_count()}], Spark 4.1.2, Java 17",
+            "spark": f"local[{cpus}], Spark 4.1.2, Java 17",
         },
         "gate": (
             "python3 tools/bench_diff.py BASELINE_BENCH.json "
