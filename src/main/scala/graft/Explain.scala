@@ -10,8 +10,14 @@ object Explain {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = GraftSession.localSession(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    // untruncated metadata strings (`DataFilters`, `PushedFilters`):
+    // Spark cuts them at 100 characters, and a cut that lands at
+    // different points when expression ids differ in digit count makes
+    // identical plans read as different under tools/plan_diff.py
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
     // trailing k=v args set session confs (the convention Bench uses),
-    // so conf-armed plan variants can be dumped for the evidence files
+    // so conf-armed plan variants can be dumped for the evidence files;
+    // applied after the default above, so an explicit arg wins
     val (confs, queryArgs) = args.partition(_.contains("="))
     confs.foreach { kv =>
       val Array(k, v) = kv.split("=", 2)

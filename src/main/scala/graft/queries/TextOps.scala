@@ -399,6 +399,18 @@ object TextOps {
         graft.functions.SimHash60Expr.column(words(col("text"))).as("simhash"))
       .where(col("simhash").isNotNull)
 
+  /** The 4×15-bit bands of each row's 60-bit `simhash`: one row per
+    * band, the `keep` columns plus (band_idx, band_val). Pigeonhole: two
+    * signatures within Hamming distance 3 share at least one band.
+    */
+  private def simhashBands(sigs: DataFrame, keep: Column*): DataFrame =
+    sigs.select(keep :+ posexplode(array((0 to 3).map(i =>
+        shiftright(col("simhash"), i * 15).bitwiseAND(lit(32767L))): _*))
+      .as(Seq("band_idx", "band_val")): _*)
+  /** A band of [[simhashBands]] as one long key. */
+  private def bandBucket: Column =
+    (col("band_idx").cast("long") * 32768L + col("band_val")).as("bucket")
+
   private def q18(s: SparkSession, dir: String): DataFrame = simhashed(s, dir)
   private val simhashSql =
     s"""tok AS (
@@ -427,11 +439,7 @@ object TextOps {
   // near-dups, so a hard ≤3 filter would select nothing — the operator,
   // not the data, is under test).
   private def q61(s: SparkSession, dir: String): DataFrame = {
-    val banded = simhashed(s, dir)
-      .select(col("doc_id"), col("simhash"),
-        posexplode(array((0 to 3).map(i =>
-          shiftright(col("simhash"), i * 15).bitwiseAND(lit(32767L))): _*))
-          .as(Seq("band_idx", "band_val")))
+    val banded = simhashBands(simhashed(s, dir), col("doc_id"), col("simhash"))
     val cand = banded.as("a").join(banded.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
         col("a.band_val") === col("b.band_val") &&
@@ -480,11 +488,7 @@ object TextOps {
   // the band equi-join and the per-pair partial agg.
   private def q125(s: SparkSession, dir: String): DataFrame = {
     val sigs = simhashed(s, dir)
-    def bands(df: DataFrame) =
-      df.select(col("doc_id"), col("simhash"),
-        posexplode(array((0 to 3).map(i =>
-          shiftright(col("simhash"), i * 15).bitwiseAND(lit(32767L))): _*))
-          .as(Seq("band_idx", "band_val")))
+    def bands(df: DataFrame) = simhashBands(df, col("doc_id"), col("simhash"))
     val delta = sigs.filter(col("doc_id") % 10 === 0)
     val corpus = sigs.filter(col("doc_id") % 10 =!= 0)
     val cand = bands(delta).as("d")
@@ -561,12 +565,8 @@ object TextOps {
     */
   def corpusClean(d: DataFrame): DataFrame = {
     val fp = d.select(col("doc_id"), md5(col("text")).as("fp"))
-    val memberships = simhashOf(d)
-      .select(col("doc_id"), posexplode(array((0 to 3).map(i =>
-        shiftright(col("simhash"), i * 15).bitwiseAND(lit(32767L))): _*))
-        .as(Seq("band_idx", "band_val")))
-      .select(col("doc_id").as("id"),
-        (col("band_idx").cast("long") * 32768L + col("band_val")).as("bucket"))
+    val memberships = simhashBands(simhashOf(d), col("doc_id"))
+      .select(col("doc_id").as("id"), bandBucket)
     // r15 (guide §2.6): the exact-fingerprint branch and the near-dup CC
     // are independent until the verdict join — the CC's global phase
     // (when the relation spans partitions) is a serial driver loop that
@@ -865,12 +865,8 @@ object TextOps {
   // one viral cluster = one hot key downstream). From q67's components:
   // per cluster size, how many clusters and how many docs.
   private def q134(s: SparkSession, dir: String): DataFrame = {
-    val memberships = simhashed(s, dir)
-      .select(col("doc_id"), posexplode(array((0 to 3).map(i =>
-        shiftright(col("simhash"), i * 15).bitwiseAND(lit(32767L))): _*))
-        .as(Seq("band_idx", "band_val")))
-      .select(col("doc_id").as("id"),
-        (col("band_idx").cast("long") * 32768L + col("band_val")).as("bucket"))
+    val memberships = simhashBands(simhashed(s, dir), col("doc_id"))
+      .select(col("doc_id").as("id"), bandBucket)
     graft.ops.ConnectedComponents.labelViaBuckets(memberships)
       .groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size"))
@@ -2365,11 +2361,7 @@ object TextOps {
   // trade at any corpus size (q61 keeps its groupBy form deliberately:
   // it publishes n_shared_bands, which needs the multi-band rows).
   private def q168(s: SparkSession, dir: String): DataFrame = {
-    val banded = simhashed(s, dir)
-      .select(col("doc_id"), col("simhash"),
-        posexplode(array((0 to 3).map(i =>
-          shiftright(col("simhash"), i * 15).bitwiseAND(lit(32767L))): _*))
-          .as(Seq("band_idx", "band_val")))
+    val banded = simhashBands(simhashed(s, dir), col("doc_id"), col("simhash"))
     val x = col("a.simhash").bitwiseXOR(col("b.simhash"))
     val firstCollidingBand = (0 to 3).map { i =>
       (col("a.band_idx") === i) &&
@@ -2790,13 +2782,14 @@ object TextOps {
   // ids — pair (a,b) + pair (b,c) must collapse a,b,c into ONE group
   // even though (a,c) never collided in any band. Components come from
   // graft.ops.ConnectedComponents (an exact union-find per partition
-  // of the bucket-partitioned relation, then min-label propagation —
-  // partial-agg shuffles per round, driver sees only a convergence
-  // scalar — for clusters that span partitions; at one partition that
-  // phase is skipped); cluster_id = min doc_id in the component is
+  // of the bucket-partitioned relation, then star rounds — partial-agg
+  // shuffles per round, driver sees only a convergence signature — for
+  // clusters that span partitions; at one partition the union-find's
+  // labels are the answer, planned as one partition, so cluster sizes
+  // count with a window); cluster_id = min doc_id in the component is
   // the canonical representative a dedup pass would keep.
   //
-  // Scale-critical shape: the propagation runs on the MEMBERSHIP
+  // Scale-critical shape: the clustering runs on the MEMBERSHIP
   // (doc, band-bucket) relation via ConnectedComponents.labelViaBuckets
   // — never on the materialized band-collision pair graph. A bucket's
   // members are all mutually reachable through the bucket, so the
@@ -2808,16 +2801,12 @@ object TextOps {
   // (The DuckDB oracle DOES use the pair-closure formulation — the
   // equivalence of the two is part of what the gate checks.)
   private def q67(s: SparkSession, dir: String): DataFrame = {
-    val memberships = simhashed(s, dir)
-      .select(col("doc_id"), posexplode(array((0 to 3).map(i =>
-        shiftright(col("simhash"), i * 15).bitwiseAND(lit(32767L))): _*))
-        .as(Seq("band_idx", "band_val")))
-      .select(col("doc_id").as("id"),
-        (col("band_idx").cast("long") * 32768L + col("band_val")).as("bucket"))
+    val memberships = simhashBands(simhashed(s, dir), col("doc_id"))
+      .select(col("doc_id").as("id"), bandBucket)
     withClusterSize(graft.ops.ConnectedComponents.labelViaBuckets(memberships))
   }
   /** (id, label) → (doc_id, cluster_id, cluster_size), the output of
-    * q67 and q91. Labels planned as one partition (labelAlternating's
+    * q67 and q91. Labels planned as one partition (the CC engine's
     * one-partition exit) count their clusters with a window in that
     * partition, which needs no exchange. Otherwise the sizes are an
     * aggregate joined back: the aggregate combines map-side and its join
@@ -2834,10 +2823,10 @@ object TextOps {
       labeled.join(sizes, "label").select(ids :+ col("cluster_size"): _*)
     }
   }
-  // Oracle: the same fixpoint via a recursive CTE — DuckDB's recursive
-  // UNION dedups against all prior rows, so label propagation
-  // terminates; MIN over every label that ever reached a node = the
-  // component min (edges are mirrored into both directions).
+  // Oracle: the same components from the PAIR graph by unrolled
+  // min-label rounds (OracleCc); MIN over every label that ever reached
+  // a node = the component min (edges are mirrored into both
+  // directions).
   private val q67Sql =
     s"""WITH RECURSIVE $simhashSql,
       |banded AS (
@@ -2857,29 +2846,23 @@ object TextOps {
 
   // q91 — q67's clusters via the ALTERNATING large-star/small-star CC
   // ([[graft.ops.ConnectedComponents.labelAlternating]]): same near-dup
-  // clustering contract, different fixpoint algorithm — each partition
-  // of the distinct pair list contracts to a star forest by a local
-  // union-find, then edge-list star rounds (O(log² n), independent of
-  // graph diameter) join the forests across partitions, instead of
-  // label propagation bounded by the diameter; at one partition the
-  // union-find's (doc, root) rows are the labels and no star round
-  // runs. The SimHash bands are computed once: the cached band frame
-  // feeds both sides of the candidate self-join and, as its doc_ids,
-  // the node list. Shares q67's oracle
-  // verbatim, so the gate proves THREE formulations agree: membership
-  // propagation (q67 Spark), pair-closure recursive CTE (oracle), and
-  // star contraction (here). This form takes the materialized pair
+  // clustering contract, different phase-1 input — each partition of
+  // the distinct pair list contracts to a star forest by a local
+  // union-find, and the engine's one global phase (star rounds,
+  // O(log² n), independent of graph diameter) joins the forests across
+  // partitions; at one partition the union-find's (doc, root) rows are
+  // the labels and no star round runs. The SimHash bands are computed
+  // once: the cached band frame feeds both sides of the candidate
+  // self-join and, as its doc_ids, the node list. Shares q67's oracle
+  // verbatim, so the gate proves the two front-ends and the SQL pair
+  // closure (oracle) agree. This form takes the materialized pair
   // graph — the right input when edges arrive as pairs anyway (CDC
   // identity edges, explicit link tables) or when the graph has long
   // chains; for LSH band candidates at 100 TB, q67's membership form
   // (no pair expansion) stays the default.
   private def q91(s: SparkSession, dir: String): DataFrame = {
-    val banded = simhashed(s, dir)
-      .select(col("doc_id"), posexplode(array((0 to 3).map(i =>
-        shiftright(col("simhash"), i * 15).bitwiseAND(lit(32767L))): _*))
-        .as(Seq("band_idx", "band_val")))
-      .select(col("doc_id"),
-        (col("band_idx").cast("long") * 32768L + col("band_val")).as("bucket"))
+    val banded = simhashBands(simhashed(s, dir), col("doc_id"))
+      .select(col("doc_id"), bandBucket)
       .cache() // both sides of the candidate self-join, and the nodes
     val edges = banded.as("a")
       .join(banded.as("b"), col("a.bucket") === col("b.bucket")
@@ -4128,17 +4111,13 @@ object TextOps {
   // closure-precision cost q133/q126's keeper policies exist to
   // absorb. A drifting SimHash banding would show up as strong pairs
   // leaking into inter long before dedup quality visibly rots.
-  // Shape at 100 TB: the clustering is q67's membership propagation
+  // Shape at 100 TB: the clustering is q67's membership CC
   // (no pair graph); the audit pairs are (n/5)·n shingle-bounded; the
   // label join is two broadcast-size hash joins; output is a 2-row
   // partial agg.
   private def q196(s: SparkSession, dir: String): DataFrame = {
-    val memberships = simhashed(s, dir)
-      .select(col("doc_id"), posexplode(array((0 to 3).map(i =>
-        shiftright(col("simhash"), i * 15).bitwiseAND(lit(32767L))): _*))
-        .as(Seq("band_idx", "band_val")))
-      .select(col("doc_id").as("id"),
-        (col("band_idx").cast("long") * 32768L + col("band_val")).as("bucket"))
+    val memberships = simhashBands(simhashed(s, dir), col("doc_id"))
+      .select(col("doc_id").as("id"), bandBucket)
     // consumed by both sides of the audit self-join and the length
     // table, all inside the pair audit's checkpoint job below, so it is
     // cached: unlike q194, the shingle stream here feeds a SELF-join,

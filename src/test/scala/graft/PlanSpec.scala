@@ -98,6 +98,16 @@ class PlanSpec extends AnyFunSuite {
       s"labels across partitions did not aggregate and join back:\n$many")
   }
 
+  test("q67: cluster sizes count inside one-partition labels, join back across partitions") {
+    // the membership form ends at the same one-partition exit as q91's
+    val one = executedPlan("q67_neardup_clusters")
+    assert(one.contains("Window [count(1)") && !one.contains("hashpartitioning(label"),
+      s"one-partition labels did not count in place:\n$one")
+    val many = TestSpark.acrossPartitions(executedPlan("q67_neardup_clusters"))
+    assert(!many.contains("Window") && many.contains("partial_count"),
+      s"labels across partitions did not aggregate and join back:\n$many")
+  }
+
   test("q48: six-table join uses hash joins only; orderdate filter pushed") {
     val p = executedPlan("q48_local_supplier_revenue")
     assert(!p.contains("NestedLoop") && !p.contains("Cartesian"),

@@ -47,14 +47,21 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  private def cc(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] =
-    ConnectedComponents.label(
-      nodes.toDF("id"), edges.toDF("src", "dst"))
+  /** Labels by the pair-edge front-end at one partition, checked equal
+    * to its labels across 7 partitions, where the star rounds run.
+    */
+  private def cc(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    def labels = ConnectedComponents.labelAlternating(
+        nodes.toDF("id"), edges.toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val one = labels
+    assert(acrossPartitions(labels) == one, s"across partitions vs one: $edges")
+    one
+  }
 
   test("chain collapses to one component labeled by its min (diameter > 1 round)") {
-    // 1-2-3-4-5-6-7 as a path: min label must propagate across 6 hops,
-    // exercising the multi-round fixpoint, not just one join
+    // 1-2-3-4-5-6-7 as a path: the min label must reach 6 hops away,
+    // across partitions through the star rounds, not just one join
     val labels = cc(1L to 7L, (1L to 6L).map(i => (i, i + 1)))
     assert(labels == (1L to 7L).map(_ -> 1L).toMap)
   }
@@ -113,9 +120,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 9L -> 9L))
   }
 
-  test("labelViaBuckets converges on a long bucket chain (path compression)") {
+  test("labelViaBuckets converges on a long bucket chain") {
     // chain of 40 nodes linked pairwise through 39 buckets, spread over
-    // 7 partitions so the global rounds (not phase 1 alone) must join it
+    // 7 partitions so the star rounds (not phase 1 alone) must join it
     val members = (1L to 39L).flatMap(i => Seq((i, 1000L + i), (i + 1, 1000L + i)))
       .toDF("id", "bucket")
     val labels = acrossPartitions {
@@ -130,7 +137,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // union-find already saw every bucket / edge. The only job inside
     // each call is phase 1's keyed exchange (the repartition or the
     // distinct), which the lazy checkpoint runs to plan its RDD; the
-    // seed round, the fixpoint and the convergence scalars never start.
+    // star rounds and their signatures never start.
     val members = Seq((1L, 100L), (2L, 100L), (2L, 200L), (3L, 200L),
       (4L, 300L), (5L, 300L), (9L, 400L)).toDF("id", "bucket")
     val (viaBuckets, bucketJobs) = withJobCount(ConnectedComponents.labelViaBuckets(members))
@@ -148,13 +155,15 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("maxRounds truncation throws instead of returning partial labels") {
-    // 9-chain, maxRounds = 1: one iteration (two neighbor hops + one
-    // compression hop) leaves the tail of the chain split, so the
+    // a 200-node chain over 7 partitions: phase 1 leaves many local
+    // pieces, one star round cannot make the forest stable, so the
     // operator must refuse to return its labels
     val e = intercept[IllegalStateException] {
-      ConnectedComponents.label(
-        (1L to 9L).toDF("id"), (1L to 8L).map(i => (i, i + 1)).toDF("src", "dst"),
-        maxRounds = 1)
+      acrossPartitions {
+        ConnectedComponents.labelAlternating(
+          (1L to 200L).toDF("id"), (1L until 200L).map(i => (i, i + 1)).toDF("src", "dst"),
+          maxRounds = 1)
+      }
     }
     assert(e.getMessage.contains("maxRounds=1"))
   }

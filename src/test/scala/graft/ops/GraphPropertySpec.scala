@@ -31,22 +31,6 @@ class GraphPropertySpec extends AnyFunSuite {
     nodes.map(n => n -> find(n)).toMap
   }
 
-  test("label() matches union-find on deterministic random graphs") {
-    val rng = new scala.util.Random(42)
-    for (trial <- 1 to 3) {
-      val n = 10 + trial * 10
-      val nodes = (1L to n.toLong)
-      val edges = Seq.fill(n / 2)(
-        (rng.nextInt(n).toLong + 1, rng.nextInt(n).toLong + 1))
-        .filter { case (a, b) => a != b }
-      val expected = unionFind(nodes, edges)
-      val got = ConnectedComponents.label(
-        nodes.toDF("id"), edges.toDF("src", "dst"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"trial $trial: $edges")
-    }
-  }
-
   test("labelViaBuckets matches union-find on random membership relations") {
     val rng = new scala.util.Random(7)
     for (trial <- 1 to 3) {
@@ -84,20 +68,22 @@ class GraphPropertySpec extends AnyFunSuite {
   }
 
   test("labelAlternating handles the pathological long chain (its reason to exist)") {
-    // a 200-node path: min-label propagation without compression needs
-    // O(n) rounds; the star-contraction form must stay in O(log² n)
+    // a 200-node path over 7 partitions: min-label propagation needs
+    // O(diameter) rounds; the star rounds must stay in O(log² n), for
+    // both front-ends (the membership form gets one bucket per edge)
     val n = 200L
     val nodes = (1L to n)
     val edges = (1L until n).map(i => (i, i + 1))
-    val got = ConnectedComponents.labelAlternating(
-      nodes.toDF("id"), edges.toDF("src", "dst"), maxRounds = 20)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val members = edges.flatMap { case (a, b) => Seq((a, a), (b, a)) }
+    val (got, viaBuckets) = acrossPartitions {
+      (ConnectedComponents.labelAlternating(
+        nodes.toDF("id"), edges.toDF("src", "dst"), maxRounds = 20)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+      ConnectedComponents.labelViaBuckets(members.toDF("id", "bucket"), maxRounds = 20)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    }
     assert(got == nodes.map(_ -> 1L).toMap)
-    // and it agrees with the propagation form on the same graph
-    val viaProp = ConnectedComponents.label(
-      nodes.toDF("id"), edges.toDF("src", "dst"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == viaProp)
+    assert(viaBuckets == got)
   }
 
   test("labelAlternating: isolated nodes and empty edge sets label themselves") {

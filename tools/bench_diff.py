@@ -36,6 +36,11 @@ catalog code) each rep round. When both files carry calib3_sec and its
 boot ratio disagrees with the median per-query ratio by more than 1.3x,
 the diff warns that the suite-wide move is code-attributable (or the
 anchor broke) instead of silently normalizing it away.
+The anchors run at the session's parallelism, so the cross-check needs
+both runs at the same core count: each file's parallelism is its `cpus`
+field (graft.Bench records it), or, for a promoted baseline without one,
+the `local[n]` of `baseline.host.spark`. When the two differ the diff says
+so and skips the cross-check; per-query flags and the exit code stay.
 
 DRIFT-DOMINATED VERDICT (r11): the r10 boot pair measured per-query
 drift that is anisotropic WITHIN the workload — a 0.95x cluster (mostly
@@ -64,6 +69,7 @@ repo caught it. This closes that blind spot.
 """
 import argparse
 import json
+import re
 import sys
 
 
@@ -71,6 +77,16 @@ def load(path):
     with open(path) as f:
         d = json.loads(f.read().strip())
     return d
+
+
+def parallelism(d):
+    """The run's Spark parallelism: `cpus` (graft.Bench records it), else
+    the `local[n]` of a promoted baseline's host descriptor, else None."""
+    if d.get("cpus"):
+        return int(d["cpus"])
+    spark = ((d.get("baseline") or {}).get("host") or {}).get("spark", "")
+    m = re.search(r"local\[(\d+)\]", spark)
+    return int(m.group(1)) if m else None
 
 
 def median(xs):
@@ -112,6 +128,14 @@ def main():
     oc, nc = old.get("calib_sec"), new.get("calib_sec")
     oc2, nc2 = old.get("calib2_sec"), new.get("calib2_sec")
     oc3, nc3 = old.get("calib3_sec"), new.get("calib3_sec")
+    op, np_ = parallelism(old), parallelism(new)
+    # the anchors run at the session's parallelism, so their ratio across
+    # different core counts measures the core count, not the code
+    cores_differ = op is not None and np_ is not None and op != np_
+    if cores_differ:
+        print(f"note: parallelism differs (old local[{op}], new "
+              f"local[{np_}]) — the anchors follow the core count, so the "
+              "suite-wide code-attributable cross-check is skipped")
     if oc and nc:
         print(f"anchor (arith):        old {oc:.3f}s, new {nc:.3f}s "
               f"(boot ratio {nc / oc:.2f}x)")
@@ -150,7 +174,7 @@ def main():
     # move WITH the suite median on a pure boot change; divergence >1.3x
     # means the suite-wide component is code-attributable (or the anchor
     # broke) and self-normalization would hide it
-    if oc3 and nc3 and med_ratio:
+    if oc3 and nc3 and med_ratio and not cores_differ:
         anchor_ratio = nc3 / oc3
         div = max(med_ratio / anchor_ratio, anchor_ratio / med_ratio)
         if div > 1.3:
