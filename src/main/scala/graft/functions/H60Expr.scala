@@ -51,10 +51,18 @@ object H60Expr {
   private val md = ThreadLocal.withInitial[java.security.MessageDigest](() =>
     java.security.MessageDigest.getInstance("MD5"))
 
+  /** The digest's 16 bytes, reused per thread like the digest itself:
+    * SimHash hashes every token occurrence, so one array per call was
+    * one allocation per token.
+    */
+  private val out = ThreadLocal.withInitial[Array[Byte]](() => new Array[Byte](16))
+
   def hash(s: UTF8String): Long = {
     val d = md.get()
+    val digest = out.get()
     d.reset()
-    val digest = d.digest(s.getBytes)
+    d.update(s.getBytes)
+    d.digest(digest, 0, 16)
     var v = 0L
     var i = 0
     while (i < 8) { v = (v << 8) | (digest(i) & 0xFFL); i += 1 }

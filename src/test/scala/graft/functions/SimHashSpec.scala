@@ -59,6 +59,32 @@ class SimHashSpec extends AnyFunSuite {
     assert(out(3L) == (hA & hB))
   }
 
+  test("edge cases: empty tokens, non-ASCII text and long tokens match the exploded pipeline") {
+    import spark.implicits._
+    val long = "x" * 70 + "é" * 10 // 90 bytes: longer than the digest's block
+    val docs = Seq(
+      (1L, " alpha beta"),          // leading space → one empty token
+      (2L, "alpha beta "),          // trailing space → one empty token
+      (3L, "alpha  beta"),          // doubled space → one empty token
+      (4L, " "),                    // only empty tokens
+      (5L, "Zürich 株価 señal €"),   // multi-byte UTF-8
+      (6L, s"alpha $long beta"),
+      (7L, long)
+    ).toDF("doc_id", "text")
+    def keyed(df: org.apache.spark.sql.DataFrame) =
+      df.collect() // collect-scale: test assertion, 7 synthetic rows
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val fused = keyed(graft.queries.TextOps.simhashOf(docs))
+    assert(fused.keySet == (1L to 7L).toSet)
+    assert(fused == keyed(simhashOfExploded(docs)))
+    // h60 over the reused digest buffer still equals the declarative md5 chain
+    val h = spark.sql(
+      s"""SELECT h60(t) = CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT)
+         |FROM VALUES (''), ('Zürich'), ('株価'), ('$long'), ('a') AS v(t)""".stripMargin)
+      .collect().map(_.getBoolean(0)) // collect-scale: test assertion, 5 rows
+    assert(h.toSeq == Seq.fill(5)(true))
+  }
+
   test("SQL registration: simhash60(words) is callable and agrees") {
     val viaSql = spark.sql(
       "SELECT simhash60(split('alpha alpha beta', ' ')) AS s").head().getLong(0)

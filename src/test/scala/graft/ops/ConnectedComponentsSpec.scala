@@ -1,51 +1,13 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.concurrent.duration._
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
-import graft.TestSpark.acrossPartitions
+import graft.TestSpark.{acrossPartitions, withJobCount}
 
 class ConnectedComponentsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  /** `body`'s result and the number of jobs started while it runs. A
-    * listener records every job start between two marker jobs; the
-    * listener bus delivers events in order, so once the closing marker
-    * is seen every job `body` started has been recorded.
-    */
-  private def withJobCount[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val starts = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    def marker(tag: String): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("cc-open")
-      val result = body
-      marker("cc-close")
-      eventually(timeout(30.seconds), interval(50.millis)) {
-        assert(starts.contains("cc-close"))
-      }
-      val seen = starts.asScala.toSeq
-      (result, seen.indexOf("cc-close") - seen.indexOf("cc-open") - 1)
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Labels by the pair-edge front-end at one partition, checked equal
     * to its labels across 7 partitions, where the star rounds run.
