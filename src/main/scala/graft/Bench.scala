@@ -66,8 +66,8 @@ object Bench {
 
   /** Drop everything a finished query left in storage. Queries cache
     * intermediate frames per invocation, and catalog.clearCache() drops
-    * only SQL-cache entries: GlobalIndex's sorted-pass persist and the CC
-    * fixpoint's localCheckpoints are raw RDD blocks that the
+    * only SQL-cache entries: the localCheckpoints of the CC fixpoint and
+    * of the eager overlapped builds are raw RDD blocks that the
     * ContextCleaner releases only after a JVM GC notices the frames are
     * garbage — on a large heap that lags many queries behind, so storage
     * ACCUMULATED across the suite and squeezed every cache-using query

@@ -6,11 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions._
-import graft.plans.{FuseZipFold, TopKPerGroupStrategy}
+import graft.plans.TopKPerGroupStrategy
 
-/** The engine's one registration path: its native SQL functions, the
-  * [[graft.plans.FuseZipFold]] optimizer rule and the
-  * [[graft.plans.TopKPerGroupStrategy]] planner strategy, installed
+/** The engine's one registration path: its native SQL functions and
+  * the [[graft.plans.TopKPerGroupStrategy]] planner strategy, installed
   * when the session is built. [[GraftSession.localSession]] builds
   * every session with it; a packaged deployment can equally pass
   * `spark.sql.extensions=graft.GraftExtensions`. Because everything is
@@ -24,8 +23,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       e.injectFunction(
         (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
     }
-    // fuse aggregate(zip_with(...)) vector folds into native loops
-    e.injectOptimizerRule(_ => FuseZipFold)
     // plan the custom top-k-per-group logical node (graft.ops.TopK)
     e.injectPlannerStrategy(_ => TopKPerGroupStrategy)
   }
@@ -36,6 +33,7 @@ object GraftExtensions {
   /** Every native SQL function: name, expression class, builder. */
   val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("dot_product", classOf[DotProductExpr], es => DotProductExpr(es(0), es(1))),
+    ("sq_dist", classOf[SqDistExpr], es => SqDistExpr(es(0), es(1))),
     ("vec_norm", classOf[VecNormExpr], es => VecNormExpr(es.head)),
     ("rolling_hash", classOf[RollingHashExpr], es => RollingHashExpr(es.head)),
     ("h60", classOf[H60Expr], es => H60Expr(es.head)),

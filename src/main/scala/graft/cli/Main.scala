@@ -60,11 +60,7 @@ object Main {
       val docsDf = spark.read.parquet(in)
       val verdicts = dedupVerdicts(
         docsDf.select(docsDf("doc_id"), docsDf("text")), tag = "dedup")
-      val stamp = java.time.format.DateTimeFormatter
-        .ofPattern("yyyyMMdd_HHmmss").withZone(java.time.ZoneOffset.UTC)
-        .format(java.time.Instant.now())
-      val path = s"$out/corpus_clean_$stamp"
-      verdicts.write.mode("errorifexists").parquet(path)
+      val path = Clean.writeStamped(verdicts, out, "corpus_clean")
       println(s"[dedup] wrote $path")
       spark.stop()
 

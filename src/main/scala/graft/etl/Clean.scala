@@ -37,6 +37,14 @@ object Clean {
     "short_description" -> "content",
     "date" -> "publish_date")
 
+  /** The one JSONL read contract (batch and streaming): malformed lines
+    * are kept as `_corrupt_record` rows, which [[transform]] drops and
+    * the quarantine paths route to their side sink.
+    */
+  private val jsonOptions = Map(
+    "mode" -> "PERMISSIVE",
+    "columnNameOfCorruptRecord" -> "_corrupt_record")
+
   /** The stateless clean TRANSFORM (corrupt-drop → rename → dropna →
     * IN-list → coercing cast → drop unparseable): one definition shared
     * verbatim by the batch stage and the streaming twin ([[runStream]])
@@ -53,11 +61,7 @@ object Clean {
 
   /** The pre-id portion of the pipeline: cleaned, filtered, typed. */
   def prepared(spark: SparkSession, jsonlPath: String): DataFrame =
-    transform(spark.read
-      .schema(Schemas.raw)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(jsonlPath))
+    transform(spark.read.schema(Schemas.raw).options(jsonOptions).json(jsonlPath))
 
   /** Reference-faithful Stage 1: dense 1..N ids via one global window.
     *
@@ -123,11 +127,7 @@ object Clean {
     */
   def runStream(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val raw = spark.readStream
-      .schema(Schemas.raw)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(inDir)
+    val raw = spark.readStream.schema(Schemas.raw).options(jsonOptions).json(inDir)
     withFingerprint(transform(raw))
       .select("fingerprint", "title", "content", "link", "publish_date",
         "category")
@@ -154,11 +154,7 @@ object Clean {
   def runStreamWithQuarantine(spark: SparkSession, inDir: String,
       outDir: String, quarantineDir: String, checkpointDir: String):
       org.apache.spark.sql.streaming.StreamingQuery = {
-    val raw = spark.readStream
-      .schema(Schemas.raw)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(inDir)
+    val raw = spark.readStream.schema(Schemas.raw).options(jsonOptions).json(inDir)
       // provenance BEFORE the sink split: the batch twin records which
       // input file each quarantined line came from; the stream must too
       .withColumn("source_path", input_file_name())
@@ -229,12 +225,7 @@ object Clean {
     */
   def preparedWithQuarantine(
       spark: SparkSession, jsonlPath: String, quarantineDir: String): (DataFrame, Long) = {
-    val raw = spark.read
-      .schema(Schemas.raw)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(jsonlPath)
-      .cache()
+    val raw = spark.read.schema(Schemas.raw).options(jsonOptions).json(jsonlPath).cache()
     val obs = org.apache.spark.sql.Observation()
     val bad = raw.filter(col("_corrupt_record").isNotNull)
       .select(col("_corrupt_record").as("raw_line"),
@@ -243,29 +234,29 @@ object Clean {
       .observe(obs, count(lit(1)).as("n_quarantined"))
     bad.write.mode("append").parquet(quarantineDir)
     val nBad = obs.get("n_quarantined").asInstanceOf[Long]
-    val clean = raw
-      .filter(col("_corrupt_record").isNull)
-      .withColumnsRenamed(renames)
-      .na.drop(Seq("title", "content", "category"))
-      .filter(col("category").isin(Schemas.categoriesToKeep: _*))
-      .withColumn("publish_date", try_to_timestamp(col("publish_date")))
-      .filter(col("publish_date").isNotNull)
-    (clean, nBad)
+    (transform(raw), nBad)
   }
 
   /** Stage-1 sink: timestamped directory keeps the reference's
     * no-overwrite naming (`Main.py:172-177`) — Spark writes a directory
     * of part files, so the timestamp moves from filename to dirname.
     */
-  def write(df: DataFrame, outDir: String): String = {
+  def write(df: DataFrame, outDir: String): String =
+    writeStamped(df, outDir, "clean_data")
+
+  /** Writes `df` as parquet to a new `<outDir>/<prefix>_<yyyyMMdd_HHmmss>_<nnnnnn>`
+    * directory under errorifexists and returns the path: the one
+    * no-overwrite sink of the clean and enrich stages and the CLI's dedup
+    * verb. The reference's names carry only second granularity
+    * (`Main.py:175`), so two writes in the same second would collide;
+    * the nano-derived suffix keeps no-overwrite semantics without that
+    * false failure.
+    */
+  def writeStamped(df: DataFrame, outDir: String, prefix: String): String = {
     val stamp = java.time.format.DateTimeFormatter
       .ofPattern("yyyyMMdd_HHmmss").withZone(java.time.ZoneOffset.UTC)
       .format(java.time.Instant.now())
-    // sub-second uniquifier: the reference's filename carries only
-    // second granularity (`Main.py:175`), so two writes in the same
-    // second would collide under errorifexists; a nano-derived suffix
-    // keeps no-overwrite semantics without that false failure
-    val path = f"$outDir/clean_data_${stamp}_${System.nanoTime() % 1000000L}%06d"
+    val path = f"$outDir/${prefix}_${stamp}_${System.nanoTime() % 1000000L}%06d"
     df.write.mode("errorifexists").parquet(path)
     path
   }

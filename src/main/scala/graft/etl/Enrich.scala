@@ -275,16 +275,6 @@ object Enrich {
   /** Stage-2 sink, same timestamped-directory semantics as Stage 1
     * (`Main.py:261-266`).
     */
-  def write(df: DataFrame, outDir: String): String = {
-    val stamp = java.time.format.DateTimeFormatter
-      .ofPattern("yyyyMMdd_HHmmss").withZone(java.time.ZoneOffset.UTC)
-      .format(java.time.Instant.now())
-    // sub-second uniquifier — same rationale as Clean.write: the
-    // reference's second-granularity name (`Main.py:263`) makes two
-    // same-second writes collide under errorifexists
-    val path =
-      f"$outDir/final_enriched_data_${stamp}_${System.nanoTime() % 1000000L}%06d"
-    df.write.mode("errorifexists").parquet(path)
-    path
-  }
+  def write(df: DataFrame, outDir: String): String =
+    Clean.writeStamped(df, outDir, "final_enriched_data")
 }

@@ -60,6 +60,67 @@ case class DotProductExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** sq_dist(a, b) = ((0 + (a0-b0)²) + (a1-b1)²) + … — squared euclidean
+  * distance over two array<double> columns, with the exact semantics of
+  * `aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), 0.0,
+  * (acc, v) -> acc + v)`: zip_with pads the shorter array with nulls, a
+  * null element makes the fold's `acc + null` null, so the result is
+  * null on ANY length mismatch or null element (unlike [[DotProductExpr]],
+  * which takes the min length). Same strict left fold as DuckDB's
+  * `LIST_REDUCE`, so results are bit-identical to the oracle.
+  */
+case class SqDistExpr(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def prettyName: String = "sq_dist"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val xs = a.asInstanceOf[ArrayData]
+    val ys = b.asInstanceOf[ArrayData]
+    val n = xs.numElements()
+    if (ys.numElements() != n) return null
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (xs.isNullAt(i) || ys.isNullAt(i)) return null
+      val x = xs.getDouble(i)
+      val y = ys.getDouble(i)
+      acc += (x - y) * (x - y)
+      i += 1
+    }
+    acc
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val n = ctx.freshName("n")
+      val i = ctx.freshName("i")
+      val acc = ctx.freshName("acc")
+      val x = ctx.freshName("x")
+      val y = ctx.freshName("y")
+      s"""
+         |int $n = $a.numElements();
+         |if ($b.numElements() != $n) { ${ev.isNull} = true; }
+         |else {
+         |  double $acc = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
+         |    double $x = $a.getDouble($i);
+         |    double $y = $b.getDouble($i);
+         |    $acc += ($x - $y) * ($x - $y);
+         |  }
+         |  if (!${ev.isNull}) { ${ev.value} = $acc; }
+         |}
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SqDistExpr =
+    copy(left = newLeft, right = newRight)
+}
+
 /** ‖a‖ = sqrt(((0 + a0²) + a1²) + …) — same fold as the HOF form. */
 case class VecNormExpr(child: Expression) extends UnaryExpression {
 

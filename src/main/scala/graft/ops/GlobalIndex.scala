@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** Dense 1-based global index in a total order WITHOUT a single-partition
   * window — the classic distributed zipWithIndex: range-partition on the
@@ -18,45 +17,32 @@ import org.apache.spark.storage.StorageLevel
   * independent of partition boundary placement, so RangePartitioner's
   * boundary sampling cannot affect the output.
   *
+  * One storage path: the sorted pass is stored nowhere. The count pass
+  * and the index pass both read the reused range-exchange shuffle files
+  * and each re-run the within-partition sort. Two same-boot A/Bs chose
+  * that over persisting the sorted pass:
+  *  - lineitem at sf0.1 (the bench's `x_dense_id_scalable`, 7-rep
+  *    minima): no persist 0.64 s, MEMORY_AND_DISK 0.70 s, DISK_ONLY
+  *    0.85 s;
+  *  - q192 (three indexes per invocation, 7-vs-7 interleaved, per-rep
+  *    minima): no persist 3.347 s, MEMORY_AND_DISK 3.934 s.
+  * Storing nothing also leaves no blocks for a long-lived session to
+  * release, and no suite cache pressure.
+  *
   * Extracted from the reference ETL's scale path (`etl.Clean
   * .runScalable`, byte-equal to the window form per GoldenParitySpec);
-  * reused by the corpus-shuffle operator (q111).
+  * reused by the corpus-shuffle operator (q111) and the layout audits'
+  * `ScaleOps.distributedNtile` (q163, q192).
   */
 object GlobalIndex {
 
-  /** Prepend `idCol` (dense, 1-based, in `sortCols` order) to `df`.
-    *
-    * `storage` NONE skips the sorted-pass persist entirely: the count
-    * job and the index job then each re-run the within-partition sort
-    * (the range-exchange shuffle files are still reused). That arm
-    * exists for same-boot A/B by in-session multi-pass consumers
-    * (ScaleOps.distributedNtile) — at write-once ETL scale the persist
-    * is the right default per the measured table below.
-    */
-  def withDenseIndex(df: DataFrame, idCol: String, sortCols: Seq[Column],
-      storage: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+  /** Prepend `idCol` (dense, 1-based, in `sortCols` order) to `df`. */
+  def withDenseIndex(df: DataFrame, idCol: String, sortCols: Seq[Column]): DataFrame = {
     val spark = df.sparkSession
     val sorted = df
       .repartitionByRange(sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
-    // Persist the sorted rows across the two passes: without this the
-    // count job and the index job each re-run the within-partition sort
-    // (the range-exchange shuffle files are reused, but the sort is
-    // not) — at 100 TB that is a full redundant sort pass.
-    // MEMORY_AND_DISK, chosen by same-boot A/B on the lineitem bench
-    // entry (7-rep mins at sf0.1: no-persist 0.64 s, MEMORY_AND_DISK
-    // 0.70 s, DISK_ONLY 0.85 s): forcing disk pays serialization for
-    // rows that fit memory, while MEMORY_AND_DISK keeps the no-persist
-    // economics at small scale (+8%) and degrades to disk blocks —
-    // evictable under the unified memory manager, so it cannot starve
-    // execution memory — exactly when the data outgrows storage
-    // memory. The blocks are released by the ContextCleaner once the
-    // returned frame's RDD lineage becomes unreachable (there is no
-    // sound place to unpersist eagerly — the result is lazy and the
-    // caller may evaluate it any number of times).
-    val sortedRdd =
-      if (storage == StorageLevel.NONE) sorted.rdd
-      else sorted.rdd.persist(storage)
+    val sortedRdd = sorted.rdd
     val counts = sortedRdd.mapPartitionsWithIndex { (i, it) =>
       Iterator((i, it.size.toLong))
       // collect-scale: metadata — numPartitions longs, never data rows
@@ -70,42 +56,5 @@ object GlobalIndex {
     val schema = StructType(
       StructField(idCol, LongType, nullable = false) +: sorted.schema.fields)
     spark.createDataFrame(withId, schema)
-  }
-
-  /** Eager variant (ADVICE r10): [[withDenseIndex]]'s MEMORY_AND_DISK
-    * persist of the sorted pass is released only by the ContextCleaner
-    * once the returned frame's lineage becomes unreachable — fine for
-    * the ETL's write-once use, but a long-lived session that keeps many
-    * indexed frames reachable can pin storage blocks indefinitely. This
-    * form materializes the RESULT as a local checkpoint (lineage
-    * truncated to the stored blocks, MEMORY_AND_DISK with replay from
-    * disk) and then eagerly unpersists the intermediate sorted pass, so
-    * the only storage held is the result the caller asked for. Use when
-    * the indexed frame will be consumed more than once in a session
-    * that outlives it; `withDenseIndex` remains the lazy default.
-    */
-  def withDenseIndexEager(df: DataFrame, idCol: String, sortCols: Seq[Column]): DataFrame = {
-    val sorted = df
-      .repartitionByRange(sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val sortedRdd = sorted.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val counts = sortedRdd.mapPartitionsWithIndex { (i, it) =>
-        Iterator((i, it.size.toLong))
-        // collect-scale: metadata — numPartitions longs, never data rows
-      }.collect().sortBy(_._1)
-      val offsets = counts.map(_._2).scanLeft(1L)(_ + _)
-      val spark = df.sparkSession
-      val offsetsBc = spark.sparkContext.broadcast(offsets)
-      val withId = sortedRdd.mapPartitionsWithIndex { (i, it) =>
-        var id = offsetsBc.value(i)
-        it.map { r => val out = Row.fromSeq(id +: r.toSeq); id += 1; out }
-      }
-      val schema = StructType(
-        StructField(idCol, LongType, nullable = false) +: sorted.schema.fields)
-      // eager localCheckpoint: computes and stores the indexed rows NOW,
-      // so the unpersist below cannot force a recompute of the sort
-      spark.createDataFrame(withId, schema).localCheckpoint(eager = true)
-    } finally sortedRdd.unpersist(blocking = false)
   }
 }

@@ -15,17 +15,6 @@ import graft.QueryDef
   */
 object ScaleOps {
 
-  /** The layout audits (q163/q192) construct 2-3 [[distributedNtile]]
-    * pipelines whose GlobalIndex passes each BLOCK the driver on a
-    * partition-count collect; built sequentially, each layout's
-    * range-exchange sampling + shuffle write + count runs alone while
-    * 30 of 32 cores idle (measured: the three q192 pipelines occupy
-    * ~1.7 s of strictly serial wall at sf0.1) — see [[graft.ops.Overlap]],
-    * where this helper moved when the CC-consumer family adopted it.
-    */
-  private def buildConcurrently(parts: Seq[() => DataFrame]): Seq[DataFrame] =
-    graft.ops.Overlap.frames(parts)
-
   // q63 — two-phase salted aggregation: sum of order totals per order
   // status (3 hot keys over 150k rows at sf0.1 — exactly the shape where
   // one reducer per key stalls at scale). Decimal micro-units keep the
@@ -800,7 +789,7 @@ object ScaleOps {
     // behind it instead of overlapping (ProfileQuery timeline). Both
     // frames are 5-row summaries; the eager checkpoints just force the
     // two pipelines to run side by side within this invocation.
-    val Seq(runsM, distM) = buildConcurrently(Seq(
+    val Seq(runsM, distM) = graft.ops.Overlap.frames(Seq(
       () => runs.localCheckpoint(eager = true),
       () => dist.localCheckpoint(eager = true)))
     runsM.join(distM, "col_name")
@@ -874,18 +863,7 @@ object ScaleOps {
       order: Seq[Column]): DataFrame = {
     val q = rows / buckets
     val r = rows % buckets
-    // the sorted pass is stored nowhere: the second pass re-sorts over
-    // the reused shuffle files. The r12 7-vs-7 interleaved A/B on q192
-    // (which runs this three times per invocation) chose that over
-    // GlobalIndex's MEMORY_AND_DISK persist — per-rep mins 3.347 s vs
-    // persist 3.934 s, −15%; medians −8%: at audit scale the re-sort is
-    // cheaper than holding three lineitem-sized sorted passes in storage
-    // memory, and zero storage is immune to suite cache pressure
-    // (ARCHITECTURE §8.7). The write-once ETL path keeps GlobalIndex's
-    // persist — one sorted pass, immediately consumed, no in-session
-    // accumulation.
-    val ranked = graft.ops.GlobalIndex.withDenseIndex(df, "_g_rank", order,
-      org.apache.spark.storage.StorageLevel.NONE)
+    val ranked = graft.ops.GlobalIndex.withDenseIndex(df, "_g_rank", order)
     val chunk =
       if (q == 0) col("_g_rank") // fewer rows than buckets: one row each
       else when(col("_g_rank") <= lit(r * (q + 1)),
@@ -916,7 +894,9 @@ object ScaleOps {
           expr("sum_width_part * 1000 div dom_pk").as("exp_chunks_part_milli"),
           expr("sum_width_supp * 1000 div dom_sk").as("exp_chunks_supp_milli"))
     }
-    val Seq(nat, zor) = buildConcurrently(Seq(
+    // each audit's GlobalIndex pass blocks the driver on its count
+    // collect; built side by side, the layouts overlap (graft.ops.Overlap)
+    val Seq(nat, zor) = graft.ops.Overlap.frames(Seq(
       () => audit(li, "natural", Seq(col("l_orderkey"), col("l_linenumber"))),
       () => audit(zed, "zorder",
         Seq(col("z"), col("l_orderkey"), col("l_linenumber")))))
@@ -987,7 +967,7 @@ object ScaleOps {
           expr("sum_width_supp * 1000 div dom_sk").as("exp_chunks_supp_milli"),
           expr("sum_area * 1000000 div (dom_pk * dom_sk)").as("exp_chunks_2d_micro"))
     }
-    val Seq(nat, zor, hlb) = buildConcurrently(Seq(
+    val Seq(nat, zor, hlb) = graft.ops.Overlap.frames(Seq(
       () => audit(li, "natural", Seq(col("l_orderkey"), col("l_linenumber"))),
       () => audit(zed, "zorder",
         Seq(col("z"), col("l_orderkey"), col("l_linenumber"))),

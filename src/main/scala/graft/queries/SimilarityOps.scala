@@ -10,10 +10,11 @@ import graft.QueryDef
   * (`vec_id long, embedding array<float>, label int`, 64 dims).
   *
   * Cross-engine determinism: both engines cast float→double (exact) and
-  * compute dot products as a strict left fold — Spark's
-  * `aggregate(zip_with(a,b,(x,y)->x*y), 0.0, (acc,x)->acc+x)` and
-  * DuckDB's `list_dot_product` produce bit-identical doubles (verified on
-  * the driver parquet). Centroids avoid float-sum order-dependence by
+  * compute dot products and squared distances as a strict left fold —
+  * Spark's native `dot_product`/`sq_dist` (the loop of
+  * `aggregate(zip_with(a,b,(x,y)->x*y), 0.0, (acc,x)->acc+x)`) and
+  * DuckDB's `list_dot_product`/`LIST_REDUCE` produce bit-identical
+  * doubles (verified on the driver parquet). Centroids avoid float-sum order-dependence by
   * flooring components to integer micro-units before the (exact) sum.
   *
   * Scale design (100 TB): brute-force top-k is O(n²·d) — correct baseline
@@ -205,8 +206,7 @@ object SimilarityOps {
     // post-exchange window sort). dist ≥ 0 by construction, so the
     // double field needs no NaN/-0.0 guard.
     vecs.join(broadcast(cent))
-      .withColumn("dist", expr(
-        "aggregate(zip_with(vm, cv, (x, c) -> (x - c) * (x - c)), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"))
+      .withColumn("dist", expr("sq_dist(vm, cv)"))
       .groupBy(col("vec_id"))
       .agg(min(struct(col("dist"), col("cell_id"))).as("_best"))
       .select(col("vec_id"), col("_best.cell_id").as("cell_id"),

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{FuseZipFold, TopKPerGroupStrategy}
+import graft.plans.TopKPerGroupStrategy
 
 /** The shared test session is built by [[GraftSession.localSession]],
   * like every other graft session, so everything [[GraftExtensions]]
@@ -16,6 +16,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val probes = Seq(
       "dot_product" ->
         "dot_product(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) = 32.0D",
+      "sq_dist" -> "sq_dist(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) = 27.0D",
       "vec_norm" -> "vec_norm(array(3.0D, 4.0D)) = 5.0D",
       // ((31*0+97)*31+98)*31+99 = 97*961 + 98*31 + 99
       "rolling_hash" -> s"rolling_hash('abc') = ${(97L * 961 + 98L * 31 + 99) % 1000000007L}",
@@ -36,12 +37,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("the optimizer rule and planner strategy are installed before any query") {
+  test("the planner strategy is installed before any query") {
     // a fresh sibling session has run nothing yet; it shares the
     // extensions the shared session was built with
     val fresh = spark.newSession()
-    val rules = fresh.sessionState.optimizer.batches.flatMap(_.rules)
-    assert(rules.contains(FuseZipFold), "FuseZipFold missing from the optimizer batches")
     assert(fresh.sessionState.planner.strategies.contains(TopKPerGroupStrategy),
       "TopKPerGroupStrategy missing from the planner strategies")
   }

@@ -126,5 +126,10 @@ class CleanSpec extends AnyFunSuite {
     val p3 = Enrich.write(df.limit(1), dir)
     val p4 = Enrich.write(df.limit(1), dir)
     assert(p3 != p4)
+    // the CLI's dedup verb names its output through the same helper
+    val p5 = Clean.writeStamped(df.limit(1), dir, "corpus_clean")
+    val p6 = Clean.writeStamped(df.limit(1), dir, "corpus_clean")
+    assert(p5 != p6)
+    assert(Seq(p5, p6).forall(_.startsWith(s"$dir/corpus_clean_")))
   }
 }

@@ -20,57 +20,6 @@ class GlobalIndexSpec extends AnyFunSuite {
     assert(viaOp == viaWindow)
   }
 
-  test("sorted rows are computed once across the two passes (persist bracket)") {
-    // Without the MEMORY_AND_DISK persist in withDenseIndex (level
-    // chosen by the same-boot A/B recorded there), the count job and
-    // the index job EACH read the range-exchange shuffle and re-run the
-    // within-partition sort: total shuffle records read = 2n. With the
-    // persist, the count pass materializes the sorted blocks and the
-    // index pass reads the cache: shuffle records read = n. Pin via a
-    // stage-level listener (local mode: no speculation/retries).
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val reads = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        reads.addAndGet(s.stageInfo.taskMetrics.shuffleReadMetrics.recordsRead)
-    }
-    val n = 2000L
-    val base = (1L to n).toDF("k") // local relation: no upstream shuffle
-    sc.addSparkListener(listener)
-    try {
-      val out = GlobalIndex.withDenseIndex(base, "idx", Seq(col("k")))
-      assert(out.rdd.count() == n) // rdd.count: no extra agg shuffle
-      // listener bus is async — wait for the expected floor, then settle
-      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
-      while (reads.get() < n && System.nanoTime() < deadline) Thread.sleep(50)
-      Thread.sleep(500)
-    } finally sc.removeSparkListener(listener)
-    assert(reads.get() == n, s"shuffle records read ${reads.get()} != $n — sorted pass re-executed")
-  }
-
-  test("eager variant matches the lazy form and frees the intermediate persist") {
-    // ADVICE r10: withDenseIndex's persist is released only by GC +
-    // ContextCleaner; the eager form localCheckpoints the RESULT and
-    // unpersists the sorted pass immediately, so long-lived sessions
-    // hold only the frame the caller asked for.
-    import spark.implicits._
-    val base = (1L to 500L).map(i => (i, i % 11)).toDF("k", "grp")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val eager = GlobalIndex.withDenseIndexEager(base, "idx", Seq(col("grp"), col("k")))
-    // unpersist of the sorted pass happens before return (map removal is
-    // synchronous even with blocking=false), so at most the checkpointed
-    // RESULT may remain persisted
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.size <= 1, s"intermediate persist leaked: $added")
-    val lazyForm = GlobalIndex.withDenseIndex(base, "idx", Seq(col("grp"), col("k")))
-      .collect().map(_.toSeq).toSet
-    // result is identical and still evaluable AFTER the unpersist
-    assert(eager.collect().map(_.toSeq).toSet == lazyForm)
-    assert(eager.collect().map(_.toSeq).toSet == lazyForm) // re-evaluable
-  }
-
   test("index is dense 1..n and stable across input partitioning") {
     import spark.implicits._
     val base = (1L to 1000L).map(i => (i, i % 7)).toDF("k", "grp")
