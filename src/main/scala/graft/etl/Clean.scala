@@ -24,9 +24,12 @@ import graft.schema.Schemas
   *    at `Main.py:169`).
   *
   * Scale: everything up to the sort is a narrow, whole-stage-codegen'd
-  * pipeline with the filters pushed into the scan. The global sort is one
-  * range-partition exchange. The unpartitioned `row_number` window is the
-  * 100 TB bottleneck (single partition); `cleanScalable` keeps ids dense
+  * pipeline with the filters pushed into the scan. The unpartitioned
+  * `row_number` window needs all rows in one partition: an input planned
+  * at most `OnePartition.Bytes` is read as one partition, so the window
+  * sorts it in the reading task with no exchange; a larger one is parsed
+  * in parallel and gathered through one `SinglePartition` exchange. That
+  * gather is the 100 TB bottleneck; `runScalable` keeps ids dense
   * without it via per-partition counts (sort → zipWithIndex-style
   * two-pass), at the cost of leaving the DataFrame lineage briefly.
   */
@@ -76,7 +79,9 @@ object Clean {
     // window-scale: twinned — runScalable is the byte-equal distributed
     // form (ops/GlobalIndex); this window form is the reference-parity path
     val w = Window.orderBy(col("publish_date").asc, col("link").asc)
-    prepared(spark, jsonlPath)
+    // a small input is read as one partition, which already satisfies the
+    // window's AllTuples: no SinglePartition exchange, one job
+    graft.ops.OnePartition.ifSmall(prepared(spark, jsonlPath))
       .observe("clean_metrics",
         count(lit(1)).as("rows_kept"),
         approx_count_distinct(col("category")).as("categories_kept"),

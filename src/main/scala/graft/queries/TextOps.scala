@@ -564,7 +564,6 @@ object TextOps {
     * clustering, one verdict row per document.
     */
   def corpusClean(d: DataFrame): DataFrame = {
-    val fp = d.select(col("doc_id"), md5(col("text")).as("fp"))
     val memberships = simhashBands(simhashOf(d), col("doc_id"))
       .select(col("doc_id").as("id"), bandBucket)
     // r15 (guide §2.6): the exact-fingerprint branch and the near-dup CC
@@ -573,10 +572,7 @@ object TextOps {
     // would otherwise leave the md5 canonicalization waiting behind it.
     // Two narrow columns checkpoint per side.
     val Seq(exact, near) = graft.ops.Overlap.frames(Seq(
-      () => fp
-        .join(fp.groupBy(col("fp")).agg(min(col("doc_id")).as("canon_id")), Seq("fp"))
-        .select(col("doc_id"), (col("doc_id") =!= col("canon_id")).as("is_exact_dup"))
-        .localCheckpoint(eager = true),
+      () => exactDuplicates(d).localCheckpoint(eager = true),
       () => graft.ops.ConnectedComponents.labelViaBuckets(memberships)
         .select(col("id").as("doc_id"), (col("id") =!= col("label")).as("is_near_dup"))))
     exact.join(near, Seq("doc_id"))
@@ -585,6 +581,19 @@ object TextOps {
         when(col("is_exact_dup"), lit("exact_dup"))
           .when(col("is_near_dup"), lit("near_dup"))
           .otherwise(lit("kept")).as("reason"))
+  }
+
+  /** corpusClean's exact branch: (doc_id, is_exact_dup), true for every
+    * non-min copy of identical text. A small fingerprint frame runs as
+    * one partition ([[graft.ops.OnePartition.ifSmall]]), so the
+    * aggregate on `fp` and its join back need no `hashpartitioning(fp)`
+    * exchange.
+    */
+  private[graft] def exactDuplicates(d: DataFrame): DataFrame = {
+    val fp = graft.ops.OnePartition.ifSmall(
+      d.select(col("doc_id"), md5(col("text")).as("fp")))
+    fp.join(fp.groupBy(col("fp")).agg(min(col("doc_id")).as("canon_id")), Seq("fp"))
+      .select(col("doc_id"), (col("doc_id") =!= col("canon_id")).as("is_exact_dup"))
   }
   private lazy val q126Sql =
     s"""WITH RECURSIVE $simhashSql,

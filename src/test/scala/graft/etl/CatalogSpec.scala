@@ -144,7 +144,7 @@ class CatalogSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("a frame planned above the bound keeps its exchange") {
     val wide = spark.range(4L << 20).toDF()
-    assert(wide.queryExecution.optimizedPlan.stats.sizeInBytes > Catalog.SinglePartitionBytes)
+    assert(wide.queryExecution.optimizedPlan.stats.sizeInBytes > graft.ops.OnePartition.Bytes)
     Catalog.registerView(wide, "wide_range")
     val plan = spark.sql("SELECT id % 7 AS k, COUNT(*) AS n FROM wide_range GROUP BY id % 7")
       .queryExecution.executedPlan

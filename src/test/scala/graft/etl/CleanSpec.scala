@@ -2,15 +2,24 @@ package graft.etl
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.TestSpark.withJobCount
+import graft.ops.OnePartition
 import graft.schema.Schemas
 
 /** Stage-1 semantics pinned against the reference's observed behavior
   * (SURVEY.md §2.2-§2.4, FIXTURES.md §1.1): null drops, IN-list filter,
-  * coerced date cast, deterministic dense id assignment, column contract.
+  * coerced date cast, deterministic dense id assignment, column contract,
+  * and the dense-id window's plan: one partition with no exchange for a
+  * small input, one `SinglePartition` exchange above the bound.
   */
-class CleanSpec extends AnyFunSuite {
+class CleanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
 
   private def fixture(): String = {
@@ -37,6 +46,9 @@ class CleanSpec extends AnyFunSuite {
     Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
     f.toString
   }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long]) // collect-scale: fixture
 
   test("clean keeps valid rows, drops nulls/off-list/bad dates/corrupt lines") {
     val out = Clean.run(spark, fixture()).collect()
@@ -108,9 +120,14 @@ class CleanSpec extends AnyFunSuite {
 
   test("runScalable produces byte-identical output to run") {
     val path = fixture()
-    val a = Clean.run(spark, path).collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
-    val b = Clean.runScalable(spark, path).collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
-    assert(a.toSeq == b.toSeq)
+    val a = rows(Clean.run(spark, path))
+    assert(a == rows(Clean.runScalable(spark, path)))
+    // and to the window over a gathered input, the plan a large input gets
+    val w = Window.orderBy(col("publish_date").asc, col("link").asc)
+    val gathered = Clean.prepared(spark, path).repartition(1)
+      .withColumn("id_news", row_number().over(w).cast("long"))
+      .select("id_news", "title", "content", "link", "publish_date", "category")
+    assert(a == rows(gathered))
   }
 
   test("two writes in the same second do not collide (sub-second uniquifier)") {
@@ -131,5 +148,34 @@ class CleanSpec extends AnyFunSuite {
     val p6 = Clean.writeStamped(df.limit(1), dir, "corpus_clean")
     assert(p5 != p6)
     assert(Seq(p5, p6).forall(_.startsWith(s"$dir/corpus_clean_")))
+  }
+
+  test("a small input runs the dense-id window with no exchange, in one job") {
+    val df = Clean.run(spark, fixture())
+    df.collect() // collect-scale: five rows
+    val plan = df.queryExecution.executedPlan
+    assert(collect(plan) { case e: Exchange => e }.isEmpty, s"exchange in:\n$plan")
+    val dir = Files.createTempDirectory("clean-one-job").toString
+    val (path, jobs) = withJobCount(Clean.write(Clean.run(spark, fixture()), dir))
+    assert(jobs == 1, s"Clean.run → write ran $jobs jobs")
+    assert(spark.read.parquet(path).inputFiles.length == 1)
+  }
+
+  test("an input planned above the bound keeps its SinglePartition exchange") {
+    val dir = Files.createTempDirectory("clean_wide")
+    val line = (i: Int) =>
+      f"""{"link":"http://w/$i","headline":"Headline $i","category":"TECH","short_description":"${"x" * 200}","authors":"A","date":"2022-01-${i % 28 + 1}%02d"}"""
+    val f = dir.resolve("news.jsonl")
+    val out = Files.newBufferedWriter(f)
+    try (0 until 90000).foreach { i => out.write(line(i)); out.newLine() } finally out.close()
+    try {
+      val prepared = Clean.prepared(spark, f.toString)
+      assert(prepared.queryExecution.optimizedPlan.stats.sizeInBytes > OnePartition.Bytes)
+      val plan = Clean.run(spark, f.toString).queryExecution.executedPlan
+      val gathers = collect(plan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
+      }
+      assert(gathers.size == 1, s"no SinglePartition exchange in:\n$plan")
+    } finally Files.delete(f)
   }
 }

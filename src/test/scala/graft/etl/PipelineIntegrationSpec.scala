@@ -71,4 +71,22 @@ class PipelineIntegrationSpec extends AnyFunSuite {
     assert(v(1L) == "exact_dup") // non-min copy of identical content
     assert(v(2L) == "kept")
   }
+
+  test("corpusClean's exact branch needs no fingerprint exchange on a small corpus") {
+    import spark.implicits._
+    // five distinct bodies; three exact copies and two near copies (a
+    // body written twice doubles every SimHash vote, so its signature
+    // is the body's own while its md5 differs)
+    val base = (0 until 5).map(i =>
+      (0 until 40).map(j => s"w${(i * 7919 + j * 104729) % 100003}").mkString(" "))
+    val d = (base.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++ Seq(
+      (10L, base(0)), (11L, base(0)), (12L, base(1)),
+      (20L, base(2) + " " + base(2)),
+      (21L, base(3) + " " + base(3)))).toDF("doc_id", "text")
+    val plan = graft.queries.TextOps.exactDuplicates(d).queryExecution.executedPlan.toString
+    assert(!plan.contains("hashpartitioning(fp"), plan)
+    val verdicts = graft.queries.TextOps.corpusClean(d).groupBy("reason").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap // collect-scale: 3 reasons
+    assert(verdicts == Map("kept" -> 5L, "exact_dup" -> 3L, "near_dup" -> 2L))
+  }
 }

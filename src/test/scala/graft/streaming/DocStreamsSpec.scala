@@ -213,17 +213,14 @@ class DocStreamsSpec extends AnyFunSuite {
     } finally spark.streams.removeListener(listener)
   }
 
-  private def partFiles(outDir: String): Set[String] = {
-    val d = java.nio.file.Paths.get(outDir)
-    if (!java.nio.file.Files.exists(d)) Set.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.list(d)
-      try s.iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".parquet")).toSet
-      finally s.close()
-    }
-  }
+  /** The part-files the sink has COMMITTED: read through its
+    * `_spark_metadata` log, not a directory listing. `q.stop()` can
+    * land inside a housekeeping micro-batch, whose part-file is then
+    * empty or already deleted and was never committed.
+    */
+  private def partFiles(outDir: String): Set[String] =
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(outDir))) Set.empty
+    else spark.read.parquet(outDir).inputFiles.toSet
 
   /** (fingerprint, doc_id) rows in `files` — one sweep's admits. */
   private def newPartFiles(files: Set[String]): Array[(String, Long)] =
